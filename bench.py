@@ -56,8 +56,10 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from lidartree_spark.session import default_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = default_cpus()
 # bench tile grid: 48x48 = 2304 tiles of 64x64 px (~9.4M px).
 GRID = int(os.environ.get("SPARK_GRAFT_BENCH_GRID", "48"))
 # scaling-pair grid: LARGE on purpose. Efficiency N->4N under a fixed
@@ -464,9 +466,8 @@ def main() -> None:
                         "points_to_tiles_detect", "clouds_tree_metrics",
                         "edge_detection_stats", "raster_chull_mask"):
                 continue  # tile-pipeline ops, covered by the headline number
-            # one failing query must not discard the whole artifact
-            # (e.g. laz_chablais_detect needs the reference checkout on
-            # disk) — degrade to an error note and keep timing the rest
+            # one failing query must not discard the whole artifact —
+            # degrade to an error note and keep timing the rest
             try:
                 best = None
                 for _ in range(2):  # min-of-2: first run pays codegen

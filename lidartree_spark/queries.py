@@ -1,5 +1,5 @@
 """Query registry: every implemented operator from SURVEY.md §2 exposed as a
-(spark_fn, oracle_sql) pair for the driver's DuckDB cross-check.
+(spark side, DuckDB oracle) row of REGISTRY for the driver's cross-check.
 
 Conventions for byte-stable Spark<->DuckDB parity:
 - prefer integer-exact arithmetic (counts, integer-valued doubles like
@@ -122,10 +122,8 @@ FROM lineitem
 GROUP BY l_suppkey
 """
 
-# merged driver gate: aba_metrics + the exact type-7 quantile vector in ONE
-# row per plot (same GROUP BY — the standalone quantile variant lives on in
-# the _EXTENDED local gate set; the driver's correctness harness caps at 50
-# rows, so redundant variants yield their slot to composite gates).
+# aba_metrics + the exact type-7 quantile vector in ONE row per plot (same
+# GROUP BY; the standalone quantile variant is the LOCAL aba_quantiles).
 def _aba_metrics_sql(qfn: str) -> str:
     cols = ",\n       ".join(
         f"ROUND({qfn}(l_quantity, {p}), 6) AS zq{int(p * 100)}"
@@ -262,15 +260,11 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n,
 FROM hs
 """
 
-# Driver-budget repack (round 3b): hist_detection + height_regression are
-# single-row gates over the SAME mutual-NN matching CTE — one section-tagged
-# row pins both, and the freed slot pins streaming_dedup. Standalone twins
-# stay verified in the extended set.
+# hist_detection + height_regression are single-row gates over the SAME
+# mutual-NN matching CTE — one section-tagged row pins both; the 'stack'
+# section carries hist_stack's full fact set (every (bucket, category)
+# count) as long-format rows. The standalones are LOCAL gates.
 def _matching_scores_sql(d: str) -> str:
-    # 'stack' section (round-5 repack): hist_stack's full fact set —
-    # every (bucket, category) count — folded in as long-format rows so
-    # the standalone gate could vacate its driver slot (it remains
-    # individually verified in _EXTENDED).
     s = "STRING" if d == "spark" else "VARCHAR"
     return f"""
 WITH h AS ({_hist_detection_sql(d)}),
@@ -429,8 +423,7 @@ FROM documents
 # fingerprinting (rolling hash)"): fp(doc) = sum_i ascii(c_i) * B^(n-i)
 # mod M with B=131, M=2^31-1 — the polynomial form whose windowed variant
 # is the rolling shingle hash. Merged with the md5 token-bag fingerprint
-# (the old standalone doc_fingerprint, now in _EXTENDED) into one per-doc
-# row.
+# (the standalone LOCAL doc_fingerprint) into one per-doc row.
 #
 # Spark computes the polynomial by Horner's rule in a SINGLE per-row
 # `aggregate(split(text, ''))` higher-order expression — one JVM-side
@@ -557,8 +550,8 @@ FROM documents
 """
 
 # Merged per-doc text-analysis gate (language-ID + quality scoring + BPE-ish
-# token counting in one row — the three standalone queries live on in
-# _EXTENDED). One scan, all columns integer-/string-exact.
+# token counting in one row — the three standalones are LOCAL gates).
+# One scan, all columns integer-/string-exact.
 _TEXT_ANALYSIS_SPARK = r"""
 SELECT doc_id,
        n_chars,
@@ -846,11 +839,12 @@ def _lat_seq(dialect: str, lo: str, hi: str, tab: str, col: str) -> str:
 
 def _minhash_sql(shingles: str, dialect: str) -> str:
     bands = _lat_seq(dialect, "0", "3", "bands", "b")
+    s = "STRING" if dialect == "spark" else "VARCHAR"
     return f"""
 WITH shingles AS ({shingles}),
 sig AS (
   SELECT doc_id, b,
-         MIN(md5(CONCAT(CAST(b AS STRING), '|', shingle))) AS band_sig
+         MIN(md5(CONCAT(CAST(b AS {s}), '|', shingle))) AS band_sig
   FROM shingles{bands}
   GROUP BY doc_id, b
 )
@@ -914,8 +908,8 @@ def _ngram_jaccard_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _text_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged text near-dup pair gate (driver-budget repack: one row pins
-    BOTH shingle-based pair finders). section='minhash' = MinHash+LSH band
+    """Merged text near-dup pair gate (one row pins BOTH shingle-based
+    pair finders). section='minhash' = MinHash+LSH band
     collisions; section='jaccard' = exact n-gram Jaccard >= 0.12 with the
     shingle self-join salted through grid.salted_join (the oracle stays
     the plain join — the physical rewrite must change nothing)."""
@@ -930,8 +924,7 @@ def _text_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _text_neardup_duck() -> str:
-    mh = _minhash_sql(_SHINGLES_DUCK, "duck").replace("AS STRING",
-                                                      "AS VARCHAR")
+    mh = _minhash_sql(_SHINGLES_DUCK, "duck")
     jc = _jaccard_sql(_SHINGLES_DUCK)
     return f"""
 SELECT 'minhash' AS section, doc_a, doc_b,
@@ -1079,9 +1072,9 @@ WHERE {bitcount} <= 8
 
 
 _SIMHASH_ND_SPARK = _simhash_neardup(
-    "%%SIMHASH%%", "bit_count(ha ^ hb)", "spark")
+    _SIMHASH_SPARK, "bit_count(ha ^ hb)", "spark")
 _SIMHASH_ND_DUCK = _simhash_neardup(
-    "%%SIMHASH%%", "bit_count(CAST(xor(ha, hb) AS BIGINT))", "duck")
+    _SIMHASH_DUCK, "bit_count(CAST(xor(ha, hb) AS BIGINT))", "duck")
 
 
 # Skew-salted cell join (north rule: salted shuffles on (cell_id, tile_id)):
@@ -1488,7 +1481,6 @@ FROM agg a JOIN counts c ON c.image_id = a.image_id
 """.replace("%%MORTON_TERMS%%", _MORTON_TERMS)
 
 
-
 def _flagship_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tiles -> detected trees, grid size seeded from the testdata scale."""
     from lidartree_spark.operators.detection import detect_trees
@@ -1722,45 +1714,6 @@ FROM ranked
 WHERE rk <= CEIL(0.2 * stratum_n)
 """
 
-_SHARED = {
-    # name: (shared_sql_for_both,)
-    "points2dsm": _POINTS2DSM,
-    "raster_metrics_regrid": _RASTER_METRICS,
-    "vegetation_indices": _VEG_INDICES,
-    "boxcox_transforms": _BOXCOX,
-    "std_tree_metrics": _STD_TREE_METRICS,
-    "exact_dedup": _EXACT_DEDUP,
-    "terrain_plane_fit": _TERRAIN_PLANE,
-    "polar2projected": _POLAR2PROJ,
-    "hist_stack": _HIST_STACK,
-    "aba_predict": _ABA_PREDICT,
-    "aba_inference": _ABA_INFERENCE,
-    "clean_raster": _CLEAN_RASTER,
-}
-
-_DIALECT = {
-    # name: (spark_sql_or_fn, duck_sql)
-    # grid-bucketed spatial joins: same skeleton, lateral-sequence dialect
-    "matching_scores": (_matching_scores_sql("spark"),
-                        _matching_scores_sql("duck")),
-    "pip_join": (_pip_join_sql("spark"), _pip_join_sql("duck")),
-    "tile_prune_roi": (_tile_prune_sql("spark"), _tile_prune_sql("duck")),
-    "raster_xy_mask": (_xy_mask_sql("spark"), _xy_mask_sql("duck")),
-    "aba_metrics": (_ABA_METRICS_SPARK, _ABA_METRICS_DUCK),
-    "text_analysis": (_TEXT_ANALYSIS_SPARK, _TEXT_ANALYSIS_DUCK),
-    "rabin_fingerprint": (_RABIN_SPARK, _RABIN_DUCK),
-    "token_topk": (_TOKEN_TOPK_SPARK, _TOKEN_TOPK_DUCK),
-    # driver-budget repack (round 3b): the two shingle-based pair finders
-    # share one section-tagged row; their standalone twins live in
-    # _EXTENDED, and the freed slot pins phash_neardup (the image-side
-    # near-dup family member) as a driver row.
-    "text_neardup": (_text_neardup, _text_neardup_duck()),
-    "embedding_neardup": (_NEARDUP_SPARK, _NEARDUP_DUCK),
-    "cell_join_salted": (_salted_join_spark, _SALTED_JOIN_ORACLE),
-    "simhash_neardup": (
-        _SIMHASH_ND_SPARK.replace("%%SIMHASH%%", _SIMHASH_SPARK),
-        _SIMHASH_ND_DUCK.replace("%%SIMHASH%%", _SIMHASH_DUCK)),
-}
 
 def _raster_local_max_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL raster_local_max kernel (coregistration.R:275-331: top-2
@@ -2504,60 +2457,6 @@ WHERE ABS(x - 48) + ABS(y - 48) <= 30
 """
 
 
-# Oracle-backed gates OUTSIDE the driver's 50-row correctness budget.
-# CORRECTNESS_r01/r02 show the driver's harness records at most 50 rows
-# (r02 = exactly the first 50 oracle_sql() entries; the 51st-53rd were
-# silently skipped), so the driver-facing oracle_sql() is held at exactly
-# 50 maximally-informative gates and these variants — each one fully
-# subsumed by an in-budget gate — are verified by the SAME comparison
-# locally (tools/check_oracle.py + tests/test_queries_gate.py run
-# oracle_sql_extended()):
-# - aba_quantiles / langid_heuristic / text_quality / bpe_token_count /
-#   doc_fingerprint: column-subsets of the merged aba_metrics /
-#   text_analysis / rabin_fingerprint gates;
-# - simhash: its SQL is embedded verbatim inside simhash_neardup (the
-#   %%SIMHASH%% substitution), so the neardup gate pins it;
-# - matching_mutual_nn: the mutual-NN variant of tree_match_oracle (the
-#   reference semantic is the greedy matcher, which keeps its slot);
-# - embedding_topk: the exact brute-force anchor, embedded as the
-#   method='exact' half of the ann_lsh driver gate;
-# - species_dim_join: trivial broadcast dim lookup, plan-asserted in
-#   tests/test_plans.py.
-# Round 3 repacks the budget further (see "Round-3 driver-budget repack" at
-# the bottom of this module): same-family single-op gates are merged into
-# section-tagged UNION gates (scalar_map_ops, aba_model_scores,
-# raster_masks, cell_index_dual) and their constituents demoted HERE, while
-# the round-3 composite pins (catalog_roi_stats, checkpoint_resume_stats,
-# halo_dominance_stats, gap_merge_mosaic, raster_local_max,
-# coregistration_stats) and the new training_data_pipeline composite take
-# the freed slots. Every demoted gate remains in this dict, so the local
-# gate set still verifies each constituent individually.
-_EXTENDED = {
-    "aba_quantiles": (_ABA_QUANTILES_SPARK, _ABA_QUANTILES_DUCK),
-    "langid_heuristic": (_LANGID_SPARK, _LANGID_DUCK),
-    "text_quality": (_TEXT_QUALITY, _TEXT_QUALITY),
-    "bpe_token_count": (_BPE_SPARK, _BPE_DUCK),
-    "doc_fingerprint": (_FINGERPRINT_SPARK, _FINGERPRINT_DUCK),
-    "simhash": (_SIMHASH_SPARK, _SIMHASH_DUCK),
-    "matching_mutual_nn": (_mutual_nn_sql("spark"), _mutual_nn_sql("duck")),
-    "embedding_topk": (_topk_spark, _TOPK_DUCK),
-    "species_dim_join": (_SPECIES_JOIN_SPARK, _SPECIES_JOIN_DUCK),
-    # not redundant variants — NEW pins that arrived after the 50-slot
-    # budget was already allocated to composite gates
-    "raster_local_max": (_raster_local_max_gate, _RASTER_LOCAL_MAX_DUCK),
-    "gap_merge_mosaic": (_gap_global_gate, _GAP_GLOBAL_DUCK),
-    "crowns_spike": (_crowns_spike_gate, _CROWNS_SPIKE_DUCK),
-    "coregistration_stats": (_coreg_e2e_gate, _COREG_E2E_DUCK),
-    "points_lifecycle_stats": (_points_lifecycle_gate,
-                               _POINTS_LIFECYCLE_DUCK),
-    "checkpoint_resume_stats": (_ckpt_resume_gate, _CKPT_RESUME_DUCK),
-    "halo_dominance_stats": (_halo_dominance_gate, _HALO_DOMINANCE_DUCK),
-    "tree_metrics_spike": (_tree_metrics_spike_gate,
-                           _TREE_METRICS_SPIKE_DUCK),
-    "catalog_roi_stats": (_catalog_roi_gate, _CATALOG_ROI_DUCK),
-    "hilbert_index": (_hilbert_index_gate, _hilbert_duck()),
-}
-
 def _ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity search driver gate: the REAL lsh_topk operator
     (mapInPandas SRP bucketize -> one (table, bucket) equi-join -> exact
@@ -2731,8 +2630,6 @@ FROM (
 WHERE rk <= 5
 """
 
-_DIALECT["ann_ivf"] = (_ann_ivf, _ANN_IVF_DUCK)
-
 
 def _multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL image_features operator (decode -> bilinear resize ->
@@ -2876,9 +2773,6 @@ FROM stats s
 JOIN ge g ON g.t = s.t
 JOIN tstats ts ON ts.t = s.t
 """
-
-_DIALECT["multimodal_image_features"] = (_multimodal_features,
-                                         _MULTIMODAL_DUCK)
 
 
 def _checkpointed_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3294,8 +3188,7 @@ def _maxima_localmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 # closure by recursive CTE over the identical candidate pairs. Node ids are
 # zero-padded so the operator's lexicographic min-label equals numeric min.
 def _dedup_clusters_duck() -> str:
-    mh = _minhash_sql(_SHINGLES_DUCK, "duck").replace("AS STRING",
-                                                      "AS VARCHAR")
+    mh = _minhash_sql(_SHINGLES_DUCK, "duck")
     return f"""
 WITH RECURSIVE mh AS ({mh}),
 e AS (SELECT doc_a AS a, doc_b AS b FROM mh WHERE shared_bands >= 2),
@@ -3464,13 +3357,10 @@ def _coreg_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _coreg_kernel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-budget merge (round 4): the two coreg KERNEL gates —
-    rasters_moving_cor's full correlation surface (coreg_surface) and
-    raster_local_max's dominance-filtered top-2 statistics — share one
-    section-tagged long-format row, freeing a driver slot for the
-    points_lifecycle_stats composite (the complete points branch, the one
-    codepath no driver row exercised end-to-end). Both constituents stay
-    individually verified in the extended set."""
+    """The two coreg KERNEL gates — rasters_moving_cor's full
+    correlation surface (coreg_surface) and raster_local_max's
+    dominance-filtered top-2 statistics — as one section-tagged
+    long-format row."""
     surf = _coreg_surface(spark, sf_dir).selectExpr(
         "'surface' AS section", "CAST(tile AS INT) AS tile",
         "dx AS kx", "dy AS ky", "'corr' AS metric", "corr AS v")
@@ -4181,47 +4071,6 @@ def _points2dtm_tin_plane(spark: SparkSession, sf_dir: str) -> DataFrame:
                              schema="col int, i int, j int, z double")
 
 
-_DIALECT["ann_lsh"] = (_ann_lsh, _ANN_LSH_DUCK)
-_DIALECT["north_star_stats"] = (_north_star_stats, _NORTH_STAR_DUCK)
-
-_NO_ORACLE = {
-    "north_star_chain": _north_star_chain,
-    "tree_detect_tiles": _flagship_detect,
-    "tree_match_greedy": _match_greedy,
-    "tiles_decode_invariants": _decode_invariants,
-    "tree_detect_halo": _halo_detect,
-    "tree_detect_crowns": _detect_with_crowns,
-    "tree_detection_catalog_roi": _detect_catalog_roi,
-    "gap_detection": _gap_detect,
-    "gap_detection_global": _gap_detect_global,
-    "coregistration": _coregistration,
-    "checkpointed_detect": _checkpointed_detect,
-    "points_to_tiles_detect": _points_to_tiles,
-    "points2dtm_normalize_detect": _points2dtm_normalize_detect,
-    "clouds_tree_metrics": _tree_metrics,
-    "gap_detection_reconstruct": _gap_detect_reconstruct,
-}
-
-_DIALECT["edge_detection_stats"] = (_edge_stats, _EDGE_STATS_DUCK)
-_DIALECT["tree_match_oracle"] = (_tree_match_oracle, _TM_ORACLE_DUCK)
-_DIALECT["raster_chull_mask"] = (_chull_mask, _chull_mask_duck())
-_DIALECT["tiles_roundtrip_stats"] = (_tiles_roundtrip, _RT_DUCK)
-_DIALECT["maxima_localmax"] = (_maxima_localmax, _MAXIMA_DUCK)
-_DIALECT["dedup_clusters"] = (_dedup_clusters, _dedup_clusters_duck())
-_DIALECT["cell_index_hierarchy"] = (_cell_index, _CELL_INDEX_DUCK)
-_DIALECT["coreg_surface"] = (_coreg_surface, _COREG_SURF_DUCK)
-_DIALECT["watershed_voronoi"] = (_watershed_voronoi, _WATERSHED_DUCK)
-_DIALECT["dem_filtering_surface"] = (_dem_filtering_surface, _DEMFILT_DUCK)
-_DIALECT["label_components_blocks"] = (_label_components_blocks,
-                                       _LABEL_CC_DUCK)
-_DIALECT["zonal_adjust_stats"] = (_zonal_adjust_stats, _ZONAL_DUCK)
-_DIALECT["tree_extraction_stats"] = (_tree_extraction_stats,
-                                     _TREE_EXTRACT_DUCK)
-_DIALECT["points2dtm_tin_plane"] = (_points2dtm_tin_plane, _TIN_PLANE_DUCK)
-_DIALECT["gap_ladder_surface"] = (_gap_ladder_surface, _GAP_LADDER_DUCK)
-_DIALECT["crown_wkt_rects"] = (_crown_wkt_rects, _CROWN_WKT_DUCK)
-
-
 # --- Structured Streaming gates: the STREAM's result (memory sink,
 # availableNow) is compared against a plain batch SQL oracle — on bounded
 # input a correct streaming aggregation must equal the batch answer.
@@ -4399,37 +4248,6 @@ SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
 FROM events GROUP BY event_type
 """
 
-_DIALECT["streaming_dedup"] = (_streaming_dedup, _STREAM_DEDUP_DUCK)
-_DIALECT["streaming_windowed_events"] = (_streaming_windowed,
-                                         _STREAM_WINDOWED_DUCK)
-_DIALECT["streaming_running_totals"] = (_streaming_totals,
-                                        _STREAM_TOTALS_DUCK)
-_DIALECT["streaming_detect_resume"] = (_streaming_detect_resume,
-                                       _STREAM_DETECT_DUCK)
-
-
-# ===========================================================================
-# Round-3 driver-budget repack. The driver's correctness harness records at
-# most 50 oracle rows (see _EXTENDED's note), so every one of those rows
-# should pin as much of SURVEY.md §2 as possible. Three moves, applied at
-# the bottom of this module so every constituent stays defined and
-# individually verifiable above:
-#   1. MERGE same-family single-op gates into one section-tagged UNION gate
-#      (scalar_map_ops, aba_model_scores, raster_masks, cell_index_dual) —
-#      each merged row carries every value its constituents carried, under
-#      a documented generic schema.
-#   2. ADD training_data_pipeline: the LLM-corpus counterpart of
-#      north_star_stats — exact dedup -> MinHash-LSH near-dup clustering
-#      through the REAL distributed connected-components operator -> keep
-#      one canonical per cluster -> language/quality/token-count filters ->
-#      deterministic stratified sample, as ONE lineage-carrying plan,
-#      re-derived end to end by a recursive-CTE DuckDB oracle.
-#   3. PROMOTE the round-3 composite pins (catalog_roi_stats,
-#      checkpoint_resume_stats, halo_dominance_stats, gap_merge_mosaic,
-#      raster_local_max, coregistration_stats) from the local-only
-#      _EXTENDED set into the driver budget; the demoted constituents move
-#      to _EXTENDED where tools/check_oracle.py and the pytest gate still
-#      run them on every pass.
 
 # --- training_data_pipeline -----------------------------------------------
 # Stage 1 (exact dedup) is the exact_dedup gate's keep-side: one canonical
@@ -4460,8 +4278,7 @@ def _td_shingles(dialect: str) -> str:
 
 _TD_PIPELINE_DUCK = f"""
 WITH RECURSIVE td_exact AS ({_TD_EXACT}),
-mh AS ({_minhash_sql(_td_shingles("duck"), "duck").replace("AS STRING",
-                                                           "AS VARCHAR")}),
+mh AS ({_minhash_sql(_td_shingles("duck"), "duck")}),
 e AS (SELECT doc_a AS a, doc_b AS b FROM mh WHERE shared_bands >= 2),
 sym AS (SELECT a AS u, b AS v FROM e UNION SELECT b, a FROM e
         UNION SELECT a, a FROM e UNION SELECT b, b FROM e),
@@ -4618,8 +4435,7 @@ FROM ({_chull_mask_duck()}) chm
 
 
 def _raster_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """raster_xy_mask + raster_chull_mask as one section-tagged gate (the
-    constituents remain individually oracled in _EXTENDED)."""
+    """raster_xy_mask + raster_chull_mask as one section-tagged gate."""
     load_views(spark, sf_dir)
     xy = spark.sql(_xy_mask_sql("spark")).selectExpr(
         "'xy' AS section", "CAST(cx AS BIGINT) AS a",
@@ -4651,38 +4467,7 @@ def _cell_index_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.unionAll(h)
 
 
-# --- the repack itself ------------------------------------------------------
-# demotions: constituents stay individually verifiable in the local gate set
-for _n in ("vegetation_indices", "boxcox_transforms", "clean_raster",
-           "polar2projected", "aba_predict", "aba_inference", "exact_dedup"):
-    _demoted_sql = _SHARED.pop(_n)
-    _EXTENDED[_n] = (_demoted_sql, _demoted_sql)
-for _n in ("raster_xy_mask", "raster_chull_mask", "cell_index_hierarchy",
-           "tile_prune_roi"):
-    _EXTENDED[_n] = _DIALECT.pop(_n)
-# merged replacements + the new composite
-_SHARED["scalar_map_ops"] = _SCALAR_MAP_OPS
-_SHARED["aba_model_scores"] = _ABA_MODEL_SCORES
-_DIALECT["raster_masks"] = (_raster_masks, _RASTER_MASKS_DUCK)
-_DIALECT["cell_index_dual"] = (_cell_index_dual, _CELL_DUAL_DUCK)
-_DIALECT["training_data_pipeline"] = (_training_pipeline, _TD_PIPELINE_DUCK)
-# promotions: round-3 composite pins enter the driver budget
-for _n in ("catalog_roi_stats", "checkpoint_resume_stats",
-           "halo_dominance_stats", "gap_merge_mosaic",
-           "coregistration_stats"):
-    _DIALECT[_n] = _EXTENDED.pop(_n)
-# Round-4 repack: the two coreg KERNEL gates merge into one section-tagged
-# row (coreg_kernel_stats) and the freed slot promotes the
-# points_lifecycle_stats composite (complete points->DTM->DSM->CHM->detect
-# chain, previously extended-only). raster_local_max stays in _EXTENDED and
-# coreg_surface demotes there, so both constituents remain individually
-# verified by the local gate set.
-_EXTENDED["coreg_surface"] = _DIALECT.pop("coreg_surface")
-_DIALECT["coreg_kernel_stats"] = (_coreg_kernel_stats, _coreg_kernel_duck())
-_DIALECT["points_lifecycle_stats"] = _EXTENDED.pop("points_lifecycle_stats")
-
-
-# --- multimodal VIDEO gate (extended set; the 50-row budget is full) -------
+# --- multimodal VIDEO gate ---------------------------------------------------
 # Ten analytic videos, frame[t, y, x] = 40 + 3t + 4y + 5x (planar, <=255,
 # no zeros so I_PCM's 0->1 clamp never fires), round-robin through the FIVE
 # REAL container/codec paths (AVI/MJPEG, MP4/MJPEG, MP4/H.264-I_PCM,
@@ -4783,8 +4568,6 @@ SELECT CAST(d.v AS BIGINT) AS video_id, d.codec,
        TRUE AS psnr_ge_40
 FROM dims d LEFT JOIN exact e ON e.v = d.v
 """
-
-_EXTENDED["multimodal_video_stats"] = (_video_stats, _VIDEO_STATS_DUCK)
 
 
 # --- perceptual-hash image near-dup (integer-DCT pHash + banded LSH) -------
@@ -4916,13 +4699,8 @@ FROM cand
 WHERE bit_count(CAST(xor(ha, hb) AS BIGINT)) <= 7
 """
 
-# promoted to the driver set by the round-3b repack (slot freed by merging
-# minhash_lsh + ngram_jaccard into text_neardup); the standalone text
-# pair-finders stay verified in the extended set.
-_DIALECT["phash_neardup"] = (_phash_neardup, _PHASH_ND_DUCK)
 
-
-# --- image near-dup clustering + canonical selection (extended set) ---------
+# --- image near-dup clustering + canonical selection -------------------------
 # The image-side twin of dedup_clusters: pHash banded-LSH pairs feed the
 # REAL distributed connected-components operator, then keep-one-per-cluster.
 # Singletons survive with themselves as canonical (left join, like
@@ -4975,13 +4753,7 @@ SELECT CAST(i AS BIGINT) AS media_id, CAST(canonical AS BIGINT) AS canonical,
 FROM allv
 """
 
-_EXTENDED["image_dedup_clusters"] = (_image_dedup_gate, _IMG_DEDUP_DUCK)
-_EXTENDED["minhash_lsh"] = (_minhash_sql(_SHINGLES_SPARK, "spark"),
-                            _minhash_sql(_SHINGLES_DUCK, "duck")
-                            .replace("AS STRING", "AS VARCHAR"))
-_EXTENDED["ngram_jaccard"] = (_ngram_jaccard_salted,
-                              _jaccard_sql(_SHINGLES_DUCK))
-# --- document chunking (context-window preparation, extended set) ----------
+# --- document chunking (context-window preparation) -------------------------
 # The training-data op that turns documents into fixed-size context
 # windows: token windows of W=64 with stride S=48 (25% overlap), the
 # standard packing-precursor shape. Pure projection + bounded explode
@@ -5018,10 +4790,7 @@ FROM toks,
 """
 
 
-_EXTENDED["doc_chunking"] = (_chunk_sql("spark"), _chunk_sql("duck"))
-
-
-# --- domain-mixture sampling gate (extended set) ----------------------------
+# --- domain-mixture sampling gate --------------------------------------------
 # Data mixing (the Pile/Dolma-style step): sample so the OUTPUT follows
 # fixed target proportions per domain, not the corpus's own mix (that is
 # stratified_sample's job). Waterfilling with one feasibility scan:
@@ -5063,10 +4832,7 @@ WHERE r.rk <= q.k
 """
 
 
-_EXTENDED["mixture_sample"] = (_mixture_sql("spark"), _mixture_sql("duck"))
-
-
-# --- BPE tokenizer training gate (extended set) -----------------------------
+# --- BPE tokenizer training gate ---------------------------------------------
 # The REAL distributed trainer (operators/tokenize.train_bpe_merges: one
 # vocab shuffle + per-merge map-side pair-count partials, driver keeps only
 # the K-row merge table) on a PLANTED corpus whose merge sequence is
@@ -5121,10 +4887,8 @@ SELECT * FROM (VALUES
 ) AS t(section, step, a, b, cnt)
 """
 
-_EXTENDED["bpe_train"] = (_bpe_train, _BPE_TRAIN_DUCK)
 
-
-# --- PII scan / redaction gate (extended set) ------------------------------
+# --- PII scan / redaction gate -----------------------------------------------
 # Training-data scrubbing: count and redact emails / URLs / IPv4s. The
 # corpus is PLANTED in-query (doc i carries i%4 emails, i%3 URLs, i%2
 # IPs whose byte lengths are closed-form in i), so the DuckDB oracle
@@ -5185,10 +4949,8 @@ SELECT CAST(i AS BIGINT) AS did,
 FROM f
 """
 
-_EXTENDED["pii_scan"] = (_PII_SPARK, _PII_DUCK)
 
-
-# --- multimodal AUDIO gate (extended set) ----------------------------------
+# --- multimodal AUDIO gate ---------------------------------------------------
 # Driver-grade evidence for the WAV decode path (previously pytest-only):
 # 8 real RIFF/PCM16 files whose samples follow an integer formula that
 # PCM16 round-trips exactly, decoded distributed and reduced to per-frame
@@ -5247,10 +5009,8 @@ SELECT CAST(i AS BIGINT) AS aid, CAST(f AS BIGINT) AS frame_idx,
 FROM samples GROUP BY i, f
 """
 
-_EXTENDED["multimodal_audio_stats"] = (_audio_stats, _AUDIO_STATS_DUCK)
 
-
-# --- Gopher repetition-quality filter (extended set) -----------------------
+# --- Gopher repetition-quality filter ----------------------------------------
 # The MassiveText repetition rules (Rae et al. 2021, "Scaling Language
 # Models: ... Gopher", table A1): drop a document when the characters in
 # its most common word 2-gram exceed 20% of the text, its most common
@@ -5339,10 +5099,7 @@ JOIN d5 ON d5.doc_id = t2.doc_id
 """
 
 
-_EXTENDED["gopher_repetition"] = (_gopher_sql("spark"), _gopher_sql("duck"))
-
-
-# --- IVF-PQ ANN gate (extended set; the 50-row budget is full) -------------
+# --- IVF-PQ ANN gate ---------------------------------------------------------
 # The FAISS-style third ANN path beside ann_lsh/ann_ivf: coarse cells
 # prune the corpus, then ADC scores m-byte PQ codes without touching the
 # full vectors. Both codebooks are the operators' own deterministic
@@ -5441,10 +5198,8 @@ FROM (SELECT qid, vec_id, adc,
 WHERE rk <= 5
 """
 
-_EXTENDED["ann_pq"] = (_ann_pq, _ANN_PQ_DUCK)
 
-
-# --- image augmentation gate (extended set; the 50-row budget is full) -----
+# --- image augmentation gate -------------------------------------------------
 # Training-data augmentation as exact index/value transforms: 12 analytic
 # NON-SQUARE PNGs (orientation-pinning) run through all eight ops of
 # operators/multimodal.augment_images, the augmented PNG BYTES are decoded
@@ -5553,25 +5308,17 @@ FROM outpx
 GROUP BY i, op, oh, ow
 """
 
-_EXTENDED["image_augment_stats"] = (_image_augment_stats,
-                                    _IMAGE_AUGMENT_DUCK)
 
 # round-3b swap: the standalone stratified sample is demoted (the SAME
 # deterministic hash-ranked sampler is the final stage of the
 # ♦ training_data_pipeline DRIVER row, so the operator stays
 # driver-pinned); the freed slot promotes bpe_train — a capability class
 # (tokenizer training) no other row covers.
-_EXTENDED["stratified_sample"] = (_STRATIFIED_SAMPLE, _STRATIFIED_SAMPLE)
-_DIALECT["bpe_train"] = _EXTENDED.pop("bpe_train")
 
 # demoted by the matching_scores merge (slot now pins streaming_dedup)
-_EXTENDED["hist_detection"] = (_hist_detection_sql("spark"),
-                               _hist_detection_sql("duck"))
-_EXTENDED["height_regression"] = (_height_regression_sql("spark"),
-                                  _height_regression_sql("duck"))
 
 
-# --- exact substring-span dedup (extended set) ------------------------------
+# --- exact substring-span dedup ----------------------------------------------
 # Inter-document duplicated-SPAN detection (the Lee et al. 2021
 # "Deduplicating Training Data" exact-substring operator) re-expressed
 # relationally: hash every W=4-token window, a window is duplicated when
@@ -5633,11 +5380,7 @@ FROM agg a LEFT JOIN cov c ON c.doc_id = a.doc_id
 """
 
 
-_EXTENDED["substring_dedup"] = (_substr_dedup_sql("spark"),
-                                _substr_dedup_sql("duck"))
-
-
-# --- benchmark decontamination (extended set) -------------------------------
+# --- benchmark decontamination -----------------------------------------------
 # Eval-set contamination scan: the benchmark is 20 8-gram probes drawn
 # deterministically FROM the corpus itself (docs 0..19, offset
 # 1 + doc_id % (n_tok - 7)), so both engines derive identical ground
@@ -5697,11 +5440,7 @@ FROM toks t LEFT JOIN hits h ON h.doc_id = t.doc_id
 """
 
 
-_EXTENDED["decontaminate"] = (_decontaminate_sql("spark"),
-                              _decontaminate_sql("duck"))
-
-
-# --- sequence packing (extended set) ----------------------------------------
+# --- sequence packing --------------------------------------------------------
 # Context-window packing (the GPT-style concatenate-and-split step):
 # documents are laid head-to-tail in a deterministic md5-ranked stream
 # per language and cut into fixed B=128-token training sequences; each
@@ -5736,11 +5475,7 @@ FROM ord
 """
 
 
-_EXTENDED["sequence_pack"] = (_sequence_pack_sql("spark"),
-                              _sequence_pack_sql("duck"))
-
-
-# --- hashed-feature linear quality classifier (extended set) ----------------
+# --- hashed-feature linear quality classifier --------------------------------
 # Model-based quality filtering (the fastText-classifier step of CCNet/
 # LLaMA-style pipelines) with a 64-bucket hashing-trick linear model
 # whose weights are a closed-form function of the bucket index
@@ -5794,10 +5529,8 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id,
 FROM sc
 """
 
-_EXTENDED["quality_classifier"] = (_QC_SPARK, _QC_DUCK)
 
-
-# --- SemDeDup semantic dedup (extended set) ---------------------------------
+# --- SemDeDup semantic dedup -------------------------------------------------
 # The embedding-side near-dup DROP operator (Abbas et al. 2023): coarse
 # k-means cells bound the pairwise-cosine stage (the quadratic never
 # leaves a cell — at 10^12 vectors n_centroids grows with N and the plan
@@ -5901,10 +5634,8 @@ SELECT CAST(id AS BIGINT) AS id, cell,
 FROM allv
 """
 
-_EXTENDED["semdedup"] = (_semdedup_gate, _SEMDEDUP_DUCK)
 
-
-# --- aspect-ratio bucketed image batch packing (extended set) ---------------
+# --- aspect-ratio bucketed image batch packing -------------------------------
 # The image-side twin of sequence_pack: vision-training batch prep
 # (NaViT / SDXL-style aspect bucketing) packs images into fixed
 # pixel-budget batches WITHIN an aspect class, so a batch never mixes
@@ -5945,10 +5676,7 @@ FROM cum
 """
 
 
-_EXTENDED["image_pack"] = (_image_pack_sql("spark"), _image_pack_sql("duck"))
-
-
-# --- caption<->image alignment filtering (extended set) ---------------------
+# --- caption<->image alignment filtering -------------------------------------
 # The cross-modal pair filter of image+caption pipelines (the CLIP-score
 # step of LAION-style dataset construction, re-expressed with a
 # deterministic alignment metric): decode the image with the REAL codec,
@@ -6018,10 +5746,8 @@ SELECT printf('img%04d', t) AS media_id,
 FROM v
 """
 
-_EXTENDED["caption_alignment"] = (_caption_align_gate, _CAPTION_ALIGN_DUCK)
 
-
-# --- merge as-of join (extended set) ----------------------------------------
+# --- merge as-of join --------------------------------------------------------
 # The classic temporal operator Spark lacks: for each click, the latest
 # prior view by the same user. operators/temporal.asof_join re-expresses
 # it as union-tag + ONE keyed shuffle + a running last(ignorenulls)
@@ -6066,10 +5792,8 @@ SELECT l.event_id, CAST(l.user_id AS BIGINT) AS user_id,
 FROM l ASOF LEFT JOIN r ON l.user_id = r.r_user AND l.ts >= r.view_ts
 """
 
-_EXTENDED["asof_join"] = (_asof_gate, _ASOF_DUCK)
 
-
-# --- bucketed interval join (extended set) ----------------------------------
+# --- bucketed interval join --------------------------------------------------
 # The temporal range join: views falling inside each purchase's trailing
 # 1-hour window, per user. The Spark side is the 100 TB plan shape — the
 # interval explodes into its covered HOUR buckets (<= 2 rows for a 1-hour
@@ -6120,11 +5844,7 @@ GROUP BY 1, 2
 """
 
 
-_EXTENDED["interval_join"] = (_interval_join_sql("spark"),
-                              _interval_join_sql("duck"))
-
-
-# --- gap-based sessionization (extended set) --------------------------------
+# --- gap-based sessionization ------------------------------------------------
 # The batch twin of the streaming session window: a new session starts
 # when a user's inter-event gap exceeds 6 hours. LAG marks boundaries, a
 # running SUM numbers sessions, one grouped rollup per (user, session) —
@@ -6157,10 +5877,7 @@ FROM s GROUP BY 1, 2
 """
 
 
-_EXTENDED["sessionize"] = (_sessionize_sql("spark"), _sessionize_sql("duck"))
-
-
-# --- multi-level rollup aggregation (extended set) --------------------------
+# --- multi-level rollup aggregation ------------------------------------------
 # OLAP cube semantics over the corpus dimensions: one ROLLUP pass emits
 # (lang, source), (lang), and grand-total rows with GROUPING markers —
 # Spark plans this as a single Expand + hash aggregate (one shuffle, rows
@@ -6176,10 +5893,8 @@ FROM documents
 GROUP BY ROLLUP(lang, source)
 """
 
-_EXTENDED["rollup_counts"] = (_ROLLUP_COUNTS, _ROLLUP_COUNTS)
 
-
-# --- overview pyramid build (extended set) ----------------------------------
+# --- overview pyramid build --------------------------------------------------
 # COG/TMS-style overviews: 2x2 child tiles -> one parent at half ground
 # resolution via operators/tiles.build_overview (ONE keyed shuffle per
 # level, exact NaN-aware 2x2 box average, real png16 re-encode). The gate
@@ -6249,10 +5964,8 @@ SELECT printf('p%04d_%04d', pr, pc) AS image_id,
 FROM pix GROUP BY pr, pc
 """
 
-_EXTENDED["overview_pyramid"] = (_overview_gate, _OVERVIEW_DUCK)
 
-
-# --- streaming session windows (extended set) -------------------------------
+# --- streaming session windows -----------------------------------------------
 # The streaming twin of the batch sessionize gate: F.session_window merges
 # per-user events arriving strictly within the 6-hour gap, across TWO
 # forced micro-batches (state carries open sessions over the batch
@@ -6295,11 +6008,8 @@ SELECT CAST(user_id AS BIGINT) AS user_id,
 FROM s GROUP BY user_id, sid
 """
 
-_EXTENDED["streaming_sessions"] = (_streaming_sessions,
-                                   _STREAM_SESSIONS_DUCK)
 
-
-# --- stream-stream join (extended set) --------------------------------------
+# --- stream-stream join ------------------------------------------------------
 # The last named Structured Streaming capability: a watermarked
 # stream-stream inner join (clicks x same-user views in the trailing
 # 1-hour window) across two forced micro-batches — Spark buffers unmatched
@@ -6332,11 +6042,8 @@ FROM c JOIN v
      AND v.vts <= c.cts
 """
 
-_EXTENDED["streaming_pair_join"] = (_streaming_pair_join,
-                                    _STREAM_PAIR_DUCK)
 
-
-# --- integer-exact PageRank (extended set) ----------------------------------
+# --- integer-exact PageRank --------------------------------------------------
 # The iterative-graph-analytics family: _PR_ITERS power iterations of
 # PageRank (d = 0.85) over the symmetrized bipartite customer<->supplier
 # graph from lineitem+orders. ALL arithmetic is scaled-integer (ranks
@@ -6424,10 +6131,7 @@ SELECT CAST(node AS BIGINT) AS node, CAST(r AS BIGINT) AS rank
 FROM r{_PR_ITERS}""")
 
 
-_EXTENDED["pagerank"] = (_pagerank, _pagerank_duck())
-
-
-# --- C4 cleaning heuristics (extended set) ----------------------------------
+# --- C4 cleaning heuristics --------------------------------------------------
 # The named C4 pipeline rules (Raffel et al. 2019, "Exploring the Limits
 # of Transfer Learning..." §2.2): keep lines with >= 5 words ending in
 # terminal punctuation; drop pages containing '{' or 'lorem ipsum'; drop
@@ -6491,10 +6195,8 @@ SELECT CAST(i AS BIGINT) AS did,
 FROM ids
 """
 
-_EXTENDED["c4_heuristics"] = (_C4_SPARK, _C4_DUCK)
 
-
-# --- distributed sketches: HyperLogLog + Count-Min (extended set) -----------
+# --- distributed sketches: HyperLogLog + Count-Min ---------------------------
 # The mergeable-sketch family on deterministic md5 hashing, so BOTH
 # engines derive identical sketches from first principles (no RNG, no
 # engine-private hash). Scale story: both sketches are algebraic
@@ -6611,13 +6313,10 @@ SELECT 'hh', tok, n, CAST(est AS DOUBLE) FROM hhq
 """
 
 
-_EXTENDED["sketches"] = (_sketches_sql("spark"), _sketches_sql("duck"))
-
-
 # --- statistical text-selection filters: CCNet ppl + DSIR + tf-idf ----------
 # Three model-based data-selection operators over the documents corpus,
 # merged into one section-tagged driver gate (stat_filters); the standalone
-# variants live in _EXTENDED. All scores are quantize-then-sum integers:
+# variants are LOCAL gates. All scores are quantize-then-sum integers:
 # each log term is rounded to the 1e-4 grid FIRST and summed as BIGINT
 # (coarse on purpose: the LN inputs are engine-computed transcendentals,
 # and the odds of a 1-ulp libm disagreement landing on a rounding
@@ -6793,21 +6492,6 @@ SELECT 'tfidf', CAST(doc_id AS BIGINT), rk, score, CAST(tf AS DOUBLE), w
 FROM tfk"""
 
 
-# driver-budget repack (round 3d): the merged stat_filters row pins all
-# three selection operators (and its tfidf section re-pins the per-group
-# top-k machinery), so the standalone token_topk gate yields its slot and
-# joins the extended set — 50 driver rows, unchanged.
-_DIALECT["stat_filters"] = (_stat_filters_sql("spark"),
-                            _stat_filters_sql("duck"))
-_EXTENDED["token_topk"] = _DIALECT.pop("token_topk")
-_EXTENDED["lm_perplexity"] = (_stat_filters_sql("spark", "ppl"),
-                              _stat_filters_sql("duck", "ppl"))
-_EXTENDED["dsir_select"] = (_stat_filters_sql("spark", "dsir"),
-                            _stat_filters_sql("duck", "dsir"))
-_EXTENDED["tfidf_keywords"] = (_stat_filters_sql("spark", "tfidf"),
-                               _stat_filters_sql("duck", "tfidf"))
-
-
 # --- LAS 1.2 point-cloud ingestion gate (round 4) --------------------------
 # The reference's native input is a .laz file read by lidR::readLAS
 # (/root/reference/R/common.R:16-20; inst/extdata las_chablais3.laz). This
@@ -6891,8 +6575,6 @@ SELECT CAST(FLOOR(x) AS BIGINT) AS cx, CAST(FLOOR(y) AS BIGINT) AS cy,
 FROM p GROUP BY 1, 2
 """
 
-_EXTENDED["las_ingest_dsm"] = (_las_ingest_gate, _LAS_INGEST_DUCK)
-
 
 def _las_lifecycle_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The points_lifecycle chain FROM A .las FILE: the same plane+spike
@@ -6947,10 +6629,6 @@ def _file_lifecycle_detect(spark: SparkSession,
         F.round("s", 6).alias("s"), F.round("v", 3).alias("v"))
 
 
-_EXTENDED["las_lifecycle_detect"] = (_las_lifecycle_gate,
-                                     _POINTS_LIFECYCLE_DUCK)
-
-
 def _laz_lifecycle_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """las_lifecycle_detect with the COMPRESSED sink: the same analytic
     point field round-trips through write_laz (LASzip encode, one .laz
@@ -6959,14 +6637,10 @@ def _laz_lifecycle_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERBATIM — LASzip is lossless over the quantized integers (encoder
     and decoder are exact mirrors; round-trip pinned bit-exactly in
     tests/test_laz.py), so compression must not move a single output
-    value. This is the DuckDB-oracle evidence for the .laz codec: the
-    rows-only laz_chablais_detect covers the real reference file, this
-    covers the engine's own compressed write->read cycle."""
+    value. This is the DuckDB-oracle evidence for the .laz codec's own
+    compressed write->read cycle; the real reference file is checked in
+    tests/test_laz.py where it is present."""
     return _file_lifecycle_detect(spark, compressed=True)
-
-
-_EXTENDED["laz_lifecycle_detect"] = (_laz_lifecycle_gate,
-                                     _POINTS_LIFECYCLE_DUCK)
 
 
 def _clustered_layout_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7016,15 +6690,12 @@ FROM p
 WHERE x >= 0 AND x < 32 AND y >= 0 AND y < 32
 """
 
-_EXTENDED["clustered_layout_scan"] = (_clustered_layout_gate,
-                                      _CLUSTERED_LAYOUT_DUCK)
-
 
 def _ann_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-5 merged ANN driver gate: the SRP-LSH gate (which already
     carries its exact brute-force baseline as method='exact' rows) plus
     the IVF search path as method='ivf' rows — three ANN strategies, one
-    section-tagged driver row. Constituent gates stay in _EXTENDED."""
+    section-tagged driver row."""
     lsh = _ann_lsh(spark, sf_dir)
     ivf = _ann_ivf(spark, sf_dir).select(
         F.lit("ivf").alias("method"), "qid", "vec_id", "rk", "cosine")
@@ -7036,34 +6707,6 @@ SELECT method, qid, vec_id, rk, cosine FROM ({_ANN_LSH_DUCK})
 UNION ALL
 SELECT 'ivf' AS method, qid, vec_id, rk, cosine FROM ({_ANN_IVF_DUCK})
 """
-
-def _laz_chablais_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's REAL bundled workflow on its REAL bundled data:
-    read las_chablais3.laz (the exact file common.R:16-20 loads) with the
-    engine's own LASzip decoder (lidartree_spark/laz.py, chunk-parallel),
-    then the full tree_detection(las) lifecycle (tree_detection.R:173-206)
-    — ground-class TIN DTM, max-in-cell DSM, CHM normalize, per-tile
-    segmentation + extraction. Rows-only gate: DuckDB cannot decode LAZ,
-    so correctness of the decode itself is pinned by tests/test_laz.py's
-    exact-bbox stream checksum; this entry evidences the end-to-end
-    .laz -> trees path as one Spark plan."""
-    from lidartree_spark.las import read_las
-    from lidartree_spark.operators.detection import detect_trees
-    from lidartree_spark.operators.rasterize import (
-        normalize_tiles,
-        points_to_dtm_tiles,
-        points_to_tiles,
-    )
-    pts = read_las(spark, "/root/reference/inst/extdata/las_chablais3.laz")
-    local = pts.selectExpr("x - 974326.0 AS x", "y - 6581619.0 AS y", "z",
-                           "classification")
-    ground = local.where("classification = 2").select("x", "y", "z")
-    dtm = points_to_dtm_tiles(ground, halo_m=8.0)
-    dsm = points_to_tiles(local.select("x", "y", "z"))
-    return detect_trees(normalize_tiles(dsm, dtm))
-
-
-_NO_ORACLE["laz_chablais_detect"] = _laz_chablais_detect
 
 
 def _geotiff_spike_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7087,51 +6730,165 @@ def _geotiff_spike_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return det.select("image_id", "x", "y", "h", "crown")
 
 
-_EXTENDED["geotiff_spike_detect"] = (_geotiff_spike_gate,
-                                     _CROWNS_SPIKE_DUCK)
+# ---------------------------------------------------------------------------
+# registry: every query, registered once, as
+#   name -> (Spark side: SQL text over the TABLES views, or fn(spark, sf_dir);
+#            DuckDB oracle SQL, or None for a rows-only query;
+#            tier).
+# The driver's correctness harness records at most 50 oracle rows (in
+# CORRECTNESS_r02 it compared the first 50 oracle_sql() entries and skipped
+# the rest), so oracle_sql() is the DRIVER tier alone and
+# tests/test_registry.py holds it to 50. Most DRIVER rows are section-tagged
+# composites whose standalone constituents are LOCAL. Every oracle, LOCAL
+# or DRIVER, gets the driver's comparison in tests/test_extended_oracles.py
+# and tools/check_oracle.py.
+DRIVER, LOCAL = "driver", "local"
 
-
-# --- Round-5 driver-budget repack (final round): the last two reference
-# codepaths without driver-row evidence — crowns_spike (crown=True WKT
-# end-to-end) and tree_metrics_spike (clouds_tree_metrics end-to-end) —
-# enter the driver 50. Slots are freed by (a) folding hist_stack's facts
-# into matching_scores' 'stack' section and (b) merging the two ANN gates
-# into section-tagged ann_dual. All three vacated standalones remain
-# individually verified in _EXTENDED (tools/check_oracle.py + pytest).
-_EXTENDED["hist_stack"] = (_HIST_STACK, _HIST_STACK)
-_SHARED.pop("hist_stack")
-_EXTENDED["ann_lsh"] = _DIALECT.pop("ann_lsh")
-_EXTENDED["ann_ivf"] = _DIALECT.pop("ann_ivf")
-_DIALECT["ann_dual"] = (_ann_dual, _ANN_DUAL_DUCK)
-_DIALECT["crowns_spike"] = _EXTENDED.pop("crowns_spike")
-_DIALECT["tree_metrics_spike"] = _EXTENDED.pop("tree_metrics_spike")
+REGISTRY: dict[str, tuple[str | Callable[[SparkSession, str], DataFrame],
+                          str | None, str]] = {
+    # --- driver budget -----------------------------------------------------
+    "points2dsm": (_POINTS2DSM, _POINTS2DSM, DRIVER),
+    "raster_metrics_regrid": (_RASTER_METRICS, _RASTER_METRICS, DRIVER),
+    "std_tree_metrics": (_STD_TREE_METRICS, _STD_TREE_METRICS, DRIVER),
+    "terrain_plane_fit": (_TERRAIN_PLANE, _TERRAIN_PLANE, DRIVER),
+    "scalar_map_ops": (_SCALAR_MAP_OPS, _SCALAR_MAP_OPS, DRIVER),
+    "aba_model_scores": (_ABA_MODEL_SCORES, _ABA_MODEL_SCORES, DRIVER),
+    "matching_scores": (_matching_scores_sql("spark"), _matching_scores_sql("duck"), DRIVER),
+    "pip_join": (_pip_join_sql("spark"), _pip_join_sql("duck"), DRIVER),
+    "aba_metrics": (_ABA_METRICS_SPARK, _ABA_METRICS_DUCK, DRIVER),
+    "text_analysis": (_TEXT_ANALYSIS_SPARK, _TEXT_ANALYSIS_DUCK, DRIVER),
+    "rabin_fingerprint": (_RABIN_SPARK, _RABIN_DUCK, DRIVER),
+    "text_neardup": (_text_neardup, _text_neardup_duck(), DRIVER),
+    "embedding_neardup": (_NEARDUP_SPARK, _NEARDUP_DUCK, DRIVER),
+    "cell_join_salted": (_salted_join_spark, _SALTED_JOIN_ORACLE, DRIVER),
+    "simhash_neardup": (_SIMHASH_ND_SPARK, _SIMHASH_ND_DUCK, DRIVER),
+    "multimodal_image_features": (_multimodal_features, _MULTIMODAL_DUCK, DRIVER),
+    "north_star_stats": (_north_star_stats, _NORTH_STAR_DUCK, DRIVER),
+    "edge_detection_stats": (_edge_stats, _EDGE_STATS_DUCK, DRIVER),
+    "tree_match_oracle": (_tree_match_oracle, _TM_ORACLE_DUCK, DRIVER),
+    "tiles_roundtrip_stats": (_tiles_roundtrip, _RT_DUCK, DRIVER),
+    "maxima_localmax": (_maxima_localmax, _MAXIMA_DUCK, DRIVER),
+    "dedup_clusters": (_dedup_clusters, _dedup_clusters_duck(), DRIVER),
+    "watershed_voronoi": (_watershed_voronoi, _WATERSHED_DUCK, DRIVER),
+    "dem_filtering_surface": (_dem_filtering_surface, _DEMFILT_DUCK, DRIVER),
+    "label_components_blocks": (_label_components_blocks, _LABEL_CC_DUCK, DRIVER),
+    "zonal_adjust_stats": (_zonal_adjust_stats, _ZONAL_DUCK, DRIVER),
+    "tree_extraction_stats": (_tree_extraction_stats, _TREE_EXTRACT_DUCK, DRIVER),
+    "points2dtm_tin_plane": (_points2dtm_tin_plane, _TIN_PLANE_DUCK, DRIVER),
+    "gap_ladder_surface": (_gap_ladder_surface, _GAP_LADDER_DUCK, DRIVER),
+    "crown_wkt_rects": (_crown_wkt_rects, _CROWN_WKT_DUCK, DRIVER),
+    "streaming_dedup": (_streaming_dedup, _STREAM_DEDUP_DUCK, DRIVER),
+    "streaming_windowed_events": (_streaming_windowed, _STREAM_WINDOWED_DUCK, DRIVER),
+    "streaming_running_totals": (_streaming_totals, _STREAM_TOTALS_DUCK, DRIVER),
+    "streaming_detect_resume": (_streaming_detect_resume, _STREAM_DETECT_DUCK, DRIVER),
+    "raster_masks": (_raster_masks, _RASTER_MASKS_DUCK, DRIVER),
+    "cell_index_dual": (_cell_index_dual, _CELL_DUAL_DUCK, DRIVER),
+    "training_data_pipeline": (_training_pipeline, _TD_PIPELINE_DUCK, DRIVER),
+    "catalog_roi_stats": (_catalog_roi_gate, _CATALOG_ROI_DUCK, DRIVER),
+    "checkpoint_resume_stats": (_ckpt_resume_gate, _CKPT_RESUME_DUCK, DRIVER),
+    "halo_dominance_stats": (_halo_dominance_gate, _HALO_DOMINANCE_DUCK, DRIVER),
+    "gap_merge_mosaic": (_gap_global_gate, _GAP_GLOBAL_DUCK, DRIVER),
+    "coregistration_stats": (_coreg_e2e_gate, _COREG_E2E_DUCK, DRIVER),
+    "coreg_kernel_stats": (_coreg_kernel_stats, _coreg_kernel_duck(), DRIVER),
+    "points_lifecycle_stats": (_points_lifecycle_gate, _POINTS_LIFECYCLE_DUCK, DRIVER),
+    "phash_neardup": (_phash_neardup, _PHASH_ND_DUCK, DRIVER),
+    "bpe_train": (_bpe_train, _BPE_TRAIN_DUCK, DRIVER),
+    "stat_filters": (_stat_filters_sql("spark"), _stat_filters_sql("duck"), DRIVER),
+    "ann_dual": (_ann_dual, _ANN_DUAL_DUCK, DRIVER),
+    "crowns_spike": (_crowns_spike_gate, _CROWNS_SPIKE_DUCK, DRIVER),
+    "tree_metrics_spike": (_tree_metrics_spike_gate, _TREE_METRICS_SPIKE_DUCK, DRIVER),
+    # --- oracles checked locally ------------------------------------------
+    "aba_quantiles": (_ABA_QUANTILES_SPARK, _ABA_QUANTILES_DUCK, LOCAL),
+    "langid_heuristic": (_LANGID_SPARK, _LANGID_DUCK, LOCAL),
+    "text_quality": (_TEXT_QUALITY, _TEXT_QUALITY, LOCAL),
+    "bpe_token_count": (_BPE_SPARK, _BPE_DUCK, LOCAL),
+    "doc_fingerprint": (_FINGERPRINT_SPARK, _FINGERPRINT_DUCK, LOCAL),
+    "simhash": (_SIMHASH_SPARK, _SIMHASH_DUCK, LOCAL),
+    "matching_mutual_nn": (_mutual_nn_sql("spark"), _mutual_nn_sql("duck"), LOCAL),
+    "embedding_topk": (_topk_spark, _TOPK_DUCK, LOCAL),
+    "species_dim_join": (_SPECIES_JOIN_SPARK, _SPECIES_JOIN_DUCK, LOCAL),
+    "raster_local_max": (_raster_local_max_gate, _RASTER_LOCAL_MAX_DUCK, LOCAL),
+    "hilbert_index": (_hilbert_index_gate, _hilbert_duck(), LOCAL),
+    "vegetation_indices": (_VEG_INDICES, _VEG_INDICES, LOCAL),
+    "boxcox_transforms": (_BOXCOX, _BOXCOX, LOCAL),
+    "clean_raster": (_CLEAN_RASTER, _CLEAN_RASTER, LOCAL),
+    "polar2projected": (_POLAR2PROJ, _POLAR2PROJ, LOCAL),
+    "aba_predict": (_ABA_PREDICT, _ABA_PREDICT, LOCAL),
+    "aba_inference": (_ABA_INFERENCE, _ABA_INFERENCE, LOCAL),
+    "exact_dedup": (_EXACT_DEDUP, _EXACT_DEDUP, LOCAL),
+    "raster_xy_mask": (_xy_mask_sql("spark"), _xy_mask_sql("duck"), LOCAL),
+    "raster_chull_mask": (_chull_mask, _chull_mask_duck(), LOCAL),
+    "cell_index_hierarchy": (_cell_index, _CELL_INDEX_DUCK, LOCAL),
+    "tile_prune_roi": (_tile_prune_sql("spark"), _tile_prune_sql("duck"), LOCAL),
+    "coreg_surface": (_coreg_surface, _COREG_SURF_DUCK, LOCAL),
+    "multimodal_video_stats": (_video_stats, _VIDEO_STATS_DUCK, LOCAL),
+    "image_dedup_clusters": (_image_dedup_gate, _IMG_DEDUP_DUCK, LOCAL),
+    "minhash_lsh": (_minhash_sql(_SHINGLES_SPARK, "spark"), _minhash_sql(_SHINGLES_DUCK, "duck"), LOCAL),
+    "ngram_jaccard": (_ngram_jaccard_salted, _jaccard_sql(_SHINGLES_DUCK), LOCAL),
+    "doc_chunking": (_chunk_sql("spark"), _chunk_sql("duck"), LOCAL),
+    "mixture_sample": (_mixture_sql("spark"), _mixture_sql("duck"), LOCAL),
+    "pii_scan": (_PII_SPARK, _PII_DUCK, LOCAL),
+    "multimodal_audio_stats": (_audio_stats, _AUDIO_STATS_DUCK, LOCAL),
+    "gopher_repetition": (_gopher_sql("spark"), _gopher_sql("duck"), LOCAL),
+    "ann_pq": (_ann_pq, _ANN_PQ_DUCK, LOCAL),
+    "image_augment_stats": (_image_augment_stats, _IMAGE_AUGMENT_DUCK, LOCAL),
+    "stratified_sample": (_STRATIFIED_SAMPLE, _STRATIFIED_SAMPLE, LOCAL),
+    "hist_detection": (_hist_detection_sql("spark"), _hist_detection_sql("duck"), LOCAL),
+    "height_regression": (_height_regression_sql("spark"), _height_regression_sql("duck"), LOCAL),
+    "substring_dedup": (_substr_dedup_sql("spark"), _substr_dedup_sql("duck"), LOCAL),
+    "decontaminate": (_decontaminate_sql("spark"), _decontaminate_sql("duck"), LOCAL),
+    "sequence_pack": (_sequence_pack_sql("spark"), _sequence_pack_sql("duck"), LOCAL),
+    "quality_classifier": (_QC_SPARK, _QC_DUCK, LOCAL),
+    "semdedup": (_semdedup_gate, _SEMDEDUP_DUCK, LOCAL),
+    "image_pack": (_image_pack_sql("spark"), _image_pack_sql("duck"), LOCAL),
+    "caption_alignment": (_caption_align_gate, _CAPTION_ALIGN_DUCK, LOCAL),
+    "asof_join": (_asof_gate, _ASOF_DUCK, LOCAL),
+    "interval_join": (_interval_join_sql("spark"), _interval_join_sql("duck"), LOCAL),
+    "sessionize": (_sessionize_sql("spark"), _sessionize_sql("duck"), LOCAL),
+    "rollup_counts": (_ROLLUP_COUNTS, _ROLLUP_COUNTS, LOCAL),
+    "overview_pyramid": (_overview_gate, _OVERVIEW_DUCK, LOCAL),
+    "streaming_sessions": (_streaming_sessions, _STREAM_SESSIONS_DUCK, LOCAL),
+    "streaming_pair_join": (_streaming_pair_join, _STREAM_PAIR_DUCK, LOCAL),
+    "pagerank": (_pagerank, _pagerank_duck(), LOCAL),
+    "c4_heuristics": (_C4_SPARK, _C4_DUCK, LOCAL),
+    "sketches": (_sketches_sql("spark"), _sketches_sql("duck"), LOCAL),
+    "token_topk": (_TOKEN_TOPK_SPARK, _TOKEN_TOPK_DUCK, LOCAL),
+    "lm_perplexity": (_stat_filters_sql("spark", "ppl"), _stat_filters_sql("duck", "ppl"), LOCAL),
+    "dsir_select": (_stat_filters_sql("spark", "dsir"), _stat_filters_sql("duck", "dsir"), LOCAL),
+    "tfidf_keywords": (_stat_filters_sql("spark", "tfidf"), _stat_filters_sql("duck", "tfidf"), LOCAL),
+    "las_ingest_dsm": (_las_ingest_gate, _LAS_INGEST_DUCK, LOCAL),
+    "las_lifecycle_detect": (_las_lifecycle_gate, _POINTS_LIFECYCLE_DUCK, LOCAL),
+    "laz_lifecycle_detect": (_laz_lifecycle_gate, _POINTS_LIFECYCLE_DUCK, LOCAL),
+    "clustered_layout_scan": (_clustered_layout_gate, _CLUSTERED_LAYOUT_DUCK, LOCAL),
+    "geotiff_spike_detect": (_geotiff_spike_gate, _CROWNS_SPIKE_DUCK, LOCAL),
+    "hist_stack": (_HIST_STACK, _HIST_STACK, LOCAL),
+    "ann_lsh": (_ann_lsh, _ANN_LSH_DUCK, LOCAL),
+    "ann_ivf": (_ann_ivf, _ANN_IVF_DUCK, LOCAL),
+    # --- rows-only (tile pipelines checked against numpy in tests/) ---------
+    "north_star_chain": (_north_star_chain, None, LOCAL),
+    "tree_detect_tiles": (_flagship_detect, None, LOCAL),
+    "tree_match_greedy": (_match_greedy, None, LOCAL),
+    "tiles_decode_invariants": (_decode_invariants, None, LOCAL),
+    "tree_detect_halo": (_halo_detect, None, LOCAL),
+    "tree_detect_crowns": (_detect_with_crowns, None, LOCAL),
+    "tree_detection_catalog_roi": (_detect_catalog_roi, None, LOCAL),
+    "gap_detection": (_gap_detect, None, LOCAL),
+    "gap_detection_global": (_gap_detect_global, None, LOCAL),
+    "coregistration": (_coregistration, None, LOCAL),
+    "checkpointed_detect": (_checkpointed_detect, None, LOCAL),
+    "points_to_tiles_detect": (_points_to_tiles, None, LOCAL),
+    "points2dtm_normalize_detect": (_points2dtm_normalize_detect, None, LOCAL),
+    "clouds_tree_metrics": (_tree_metrics, None, LOCAL),
+    "gap_detection_reconstruct": (_gap_detect_reconstruct, None, LOCAL),
+}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name, sql in _SHARED.items():
-        out[name] = _sql(sql)
-    for src in (_DIALECT, _EXTENDED):
-        for name, (spark_side, _) in src.items():
-            out[name] = (spark_side if callable(spark_side)
-                         else _sql(spark_side))
-    out.update(_NO_ORACLE)
-    return out
+    return {name: spark_side if callable(spark_side) else _sql(spark_side)
+            for name, (spark_side, _, _) in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """Driver-facing oracle set: exactly 50 entries (the driver's
-    correctness harness records at most 50 rows — see _EXTENDED's note)."""
-    out = dict(_SHARED)
-    for name, (_, duck) in _DIALECT.items():
-        out[name] = duck
-    return out
-
-
-def oracle_sql_extended() -> dict[str, str]:
-    """Every oracle, including the redundant variants outside the driver's
-    50-row budget — the set tools/check_oracle.py and the pytest gate run."""
-    out = oracle_sql()
-    for name, (_, duck) in _EXTENDED.items():
-        out[name] = duck
-    return out
+    """The driver-facing oracle set: the DRIVER tier of REGISTRY."""
+    return {name: duck for name, (_, duck, tier) in REGISTRY.items()
+            if tier == DRIVER}

@@ -12,6 +12,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> str:
+    """Task slots for local[N]: SPARK_GRAFT_CPUS when set (a deployment
+    override), else the number of cores this machine has."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+
+
 def get_spark(app: str = "lidartree_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     # One BLAS/OpenMP thread per Python worker: Spark supplies the
@@ -22,7 +28,7 @@ def get_spark(app: str = "lidartree_spark", master: str | None = None,
     for v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
               "VECLIB_MAXIMUM_THREADS", "NUMEXPR_NUM_THREADS"):
         os.environ.setdefault(v, "1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(os.environ.get(
         "SPARK_GRAFT_SHUFFLE", str(max(32, int(cpus) if cpus.isdigit() else 32))))

@@ -1,13 +1,12 @@
-"""The extended oracle set — gates OUTSIDE the driver's 50-row correctness
-budget — verified in pytest with the driver's exact comparison (rows +
+"""Every oracle in the registry — the driver's budget and the local tier
+alike — verified in pytest with the driver's exact comparison (rows +
 schema + order-insensitive values), via the same code path
-tools/check_oracle.py runs. The in-budget 50 are the driver's job; these
-are ours."""
+tools/check_oracle.py runs."""
 
 import pytest
 
-from lidartree_spark.queries import _EXTENDED, oracle_sql_extended, queries
-from tools.check_oracle import compare_one, duck_connect
+from lidartree_spark.queries import queries
+from tools.check_oracle import all_oracles, compare_one, duck_connect
 
 SF = "/root/testdata/sf0.001"
 
@@ -19,8 +18,8 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", sorted(_EXTENDED))
+@pytest.mark.parametrize("name", sorted(all_oracles()))
 def test_extended_oracle(spark, duck, name):
     err = compare_one(spark, duck, name, queries()[name],
-                      oracle_sql_extended()[name], SF)
+                      all_oracles()[name], SF)
     assert err is None, f"{name}: {err}"

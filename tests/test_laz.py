@@ -248,6 +248,31 @@ def test_write_laz_sink_reads_back(chablais_df, tmp_path, spark):
                               np.sort(back[col].to_numpy())), col
 
 
+@needs_chablais
+def test_chablais_detect_plan_has_no_nested_loop(spark):
+    """The reference's real .laz through read_las -> ground TIN DTM + DSM
+    -> CHM -> detection plans with no cartesian product and no nested-loop
+    join. The registry's plan sweep covers the same chain everywhere
+    through laz_lifecycle_detect, whose .laz comes from write_laz."""
+    from lidartree_spark.las import read_las
+    from lidartree_spark.operators.detection import detect_trees
+    from lidartree_spark.operators.rasterize import (
+        normalize_tiles,
+        points_to_dtm_tiles,
+        points_to_tiles,
+    )
+    pts = read_las(spark, CHABLAIS3)
+    local = pts.selectExpr("x - 974326.0 AS x", "y - 6581619.0 AS y", "z",
+                           "classification")
+    ground = local.where("classification = 2").select("x", "y", "z")
+    dtm = points_to_dtm_tiles(ground, halo_m=8.0)
+    dsm = points_to_tiles(local.select("x", "y", "z"))
+    det = detect_trees(normalize_tiles(dsm, dtm))
+    plan = det._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
 try:
     from hypothesis import given, settings
     from hypothesis import strategies as st

@@ -1,7 +1,7 @@
 """Local replica of the driver's correctness gate: run each queries() entry
 on Spark and its oracle on DuckDB over the same sf dir; compare row-count,
-column names, and order-insensitive values. Checks the EXTENDED oracle set
-(the driver-facing 50 plus the locally-verified variants).
+column names, and order-insensitive values. Checks every oracle in the
+registry: the driver-facing oracle_sql() and the local tier.
 
 Usage: python tools/check_oracle.py [sf_dir] [name ...]
 """
@@ -37,6 +37,13 @@ def duck_connect(sf_dir: str):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"read_parquet('{sf_dir}/{t}.parquet')")
     return con
+
+
+def all_oracles() -> dict[str, str]:
+    """Every registered DuckDB oracle, whatever its tier."""
+    from lidartree_spark.queries import REGISTRY
+    return {name: duck for name, (_, duck, _) in REGISTRY.items()
+            if duck is not None}
 
 
 def compare_one(spark, con, name: str, fn, sql: str | None,
@@ -75,13 +82,13 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    from lidartree_spark.queries import oracle_sql_extended, queries
+    from lidartree_spark.queries import queries
     from lidartree_spark.session import get_spark
 
     spark = get_spark("oracle-check", master="local[8]")
     con = duck_connect(sf_dir)
 
-    qs, os_ = queries(), oracle_sql_extended()
+    qs, os_ = queries(), all_oracles()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:

@@ -19,11 +19,11 @@ sys.path.insert(0, REPO)
 def run_isolated(names, n: int = 4, sf_dir: str | None = None,
                  spark=None) -> dict:
     from lidartree_spark.queries import queries
-    from lidartree_spark.session import get_spark
+    from lidartree_spark.session import default_cpus, get_spark
 
     sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR",
                                       "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     own = spark is None
     if own:
         spark = get_spark("isolate", master=f"local[{cpus}]")

@@ -13,7 +13,7 @@ ZIP="$BUILD/lidartree_spark.zip"
 JOB="${1:-$REPO/tools/job_flagship.py}"
 shift || true
 exec spark-submit \
-  --master "${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-32}]}" \
+  --master "${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-$(nproc)}]}" \
   --py-files "$ZIP" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.sql.adaptive.coalescePartitions.minPartitionSize=64k \
