@@ -34,6 +34,11 @@ def tile_seed(image_id: str) -> int:
 _TILE_ID_RE = re.compile(r"^[tp]([0-9]{1,9})_([0-9]{1,9})$")
 
 
+def tile_id(row: int, col: int) -> str:
+    """The tile id of grid cell (row, col); parse_tile_id inverts it."""
+    return f"t{row:04d}_{col:04d}"
+
+
 def parse_tile_id(image_id: str) -> tuple[int, int]:
     """(row, col) from a 't{row}_{col}' / 'p{row}_{col}' id. The 4-digit
     padding in emitted ids is a MINIMUM width, so parsing must be by
@@ -58,7 +63,7 @@ def gen_tile(row: int, col: int, w: int = 64, h: int = 64, res: float = RES):
     flat/zero gap region and a NaN patch (exercises NA->0 fill,
     tree_detection.R:1165-1167).
     """
-    image_id = f"t{row:04d}_{col:04d}"
+    image_id = tile_id(row, col)
     rng = np.random.default_rng(tile_seed(image_id))
     x0, y1 = tile_origin(row, col, w, h, res)
     n_trees = int(rng.integers(3, 12))

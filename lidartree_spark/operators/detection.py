@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lidartree_spark.operators.grid import RES, tile_bbox
+from lidartree_spark.operators.tiles import _map_tiles, check_params
 
 TREES_SCHEMA = ("image_id string, id long, x double, y double, h double, "
                 "dom_radius double, s double, v double")
@@ -39,84 +40,54 @@ def detect_trees(tiles: DataFrame, params: dict | None = None,
     """tiles -> tree rows (tree_detection LAS/SpatRaster branch semantics,
     tree_detection.R:173-206 via tree_segmentation :862-947 +
     tree_extraction :1000-1086)."""
-    p = {**DEFAULT_PARAMS, **(params or {})}
-    out_schema = TREES_SCHEMA + (", crown string" if crown else "")
-    padded = "pad" in tiles.columns
-    cols = ["image_id", "bytes", "w", "h", "fmt"] + (["pad"] if padded else [])
+    p = check_params(DEFAULT_PARAMS, params)
+    res = p["res"]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        from lidartree_spark.codecs import decode_tile
+    def body(image_id: str, chm, pad: int) -> list[dict]:
         from lidartree_spark.generator import parse_tile_id, tile_origin
         from lidartree_spark.kernels.extraction import tree_extraction
         from lidartree_spark.kernels.segmentation import tree_segmentation
-        res = p["res"]
-        for pdf in batches:
-            out = []
-            for rec in pdf.itertuples(index=False):
-                chm = decode_tile(rec.bytes, rec.fmt, rec.w, rec.h)
-                seg = tree_segmentation(
-                    chm, res=res, nl_filter=p["nl_filter"],
-                    nl_size=p["nl_size"], sigma=p["sigma"],
-                    max_width=p["max_width"], hmin=p["hmin"], dmin=p["dmin"],
-                    dprop=p["dprop"], prop=p["prop"], min_value=p["min_value"])
-                row, col = parse_tile_id(rec.image_id)
-                pad = int(getattr(rec, "pad", 0))
-                w_core, h_core = rec.w - 2 * pad, rec.h - 2 * pad
-                x0, y1 = tile_origin(row, col, w_core, h_core, res)
-                rows = tree_extraction(
-                    seg["filled_dem"], seg["local_maxima"],
-                    seg["segments_id"], x0=x0 - pad * res, y1=y1 + pad * res,
-                    res=res, crown=crown)
-                if pad:
-                    # crop-to-core dedup (tree_detection.R:160-165): an apex
-                    # in the halo belongs to the neighbor whose core holds it
-                    x1 = x0 + w_core * res
-                    y0 = y1 - h_core * res
-                    rows = [r for r in rows
-                            if x0 <= r["x"] < x1 and y0 <= r["y"] < y1]
-                for r in rows:
-                    r["image_id"] = rec.image_id
-                out.extend(rows)
-            cols_out = ["image_id", "id", "x", "y", "h", "dom_radius", "s", "v"]
-            if crown:
-                cols_out.append("crown")
-            yield pd.DataFrame(out, columns=cols_out)
+        seg = tree_segmentation(chm, **p)
+        h_core, w_core = chm.shape[0] - 2 * pad, chm.shape[1] - 2 * pad
+        x0, y1 = tile_origin(*parse_tile_id(image_id), w_core, h_core, res)
+        rows = tree_extraction(
+            seg["filled_dem"], seg["local_maxima"], seg["segments_id"],
+            x0=x0 - pad * res, y1=y1 + pad * res, res=res, crown=crown)
+        if pad:
+            # crop-to-core dedup (tree_detection.R:160-165): an apex in the
+            # halo belongs to the neighbor whose core holds it
+            x1 = x0 + w_core * res
+            y0 = y1 - h_core * res
+            rows = [r for r in rows
+                    if x0 <= r["x"] < x1 and y0 <= r["y"] < y1]
+        for r in rows:
+            r["image_id"] = image_id
+        return rows
 
-    return tiles.select(*cols).mapInPandas(run, schema=out_schema)
+    return _map_tiles(tiles, body,
+                      TREES_SCHEMA + (", crown string" if crown else ""))
 
 
 def segment_layers(tiles: DataFrame, params: dict | None = None) -> DataFrame:
     """tiles -> 4 re-encoded raster layers per tile (tree_segmentation
     output stack, tree_detection.R:944-946), for fixture comparison and
     downstream zonal queries."""
-    p = {**DEFAULT_PARAMS, **(params or {})}
+    p = check_params(DEFAULT_PARAMS, params)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def body(image_id: str, chm, pad: int) -> list[dict]:
         import numpy as np
-        from lidartree_spark.codecs import decode_tile, encode_tile
+        from lidartree_spark.codecs import encode_tile
         from lidartree_spark.kernels.segmentation import tree_segmentation
-        for pdf in batches:
-            out = []
-            for rec in pdf.itertuples(index=False):
-                chm = decode_tile(rec.bytes, rec.fmt, rec.w, rec.h)
-                seg = tree_segmentation(
-                    chm, res=p["res"], nl_filter=p["nl_filter"],
-                    nl_size=p["nl_size"], sigma=p["sigma"],
-                    max_width=p["max_width"], hmin=p["hmin"], dmin=p["dmin"],
-                    dprop=p["dprop"], prop=p["prop"],
-                    min_value=p["min_value"])
+        seg = tree_segmentation(chm, **p)
+        h, w = chm.shape
+        return [{"image_id": image_id, "layer": name,
+                 "bytes": encode_tile(np.asarray(seg[name], np.float32),
+                                      "raw_f32"),
+                 "w": w, "h": h}
                 for name in ("local_maxima", "segments_id", "filled_dem",
-                             "smoothed_dem"):
-                    arr = np.asarray(seg[name], dtype=np.float32)
-                    out.append({"image_id": rec.image_id, "layer": name,
-                                "bytes": encode_tile(arr, "raw_f32"),
-                                "w": rec.w, "h": rec.h})
-            yield pd.DataFrame(out, columns=["image_id", "layer", "bytes",
-                                             "w", "h"])
+                             "smoothed_dem")]
 
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        run, schema=LAYERS_SCHEMA)
+    return _map_tiles(tiles, body, LAYERS_SCHEMA)
 
 
 def tree_detection_catalog(tiles: DataFrame, roi_wkt: str | None = None,
@@ -174,16 +145,3 @@ def prune_tiles_to_roi(tiles: DataFrame, roi_bbox: tuple) -> DataFrame:
     return tiles.where(
         (b["xmin"] < F.lit(xmax)) & (b["xmax"] > F.lit(xmin))
         & (b["ymin"] < F.lit(ymax)) & (b["ymax"] > F.lit(ymin)))
-
-
-def crop_to_core(trees: DataFrame, buffer_m: float) -> DataFrame:
-    """Buffered-tile dedup: keep detections whose apex falls inside the
-    owning tile's unbuffered core (crop-to-bbox rule,
-    tree_detection.R:160-165). Apex on the boundary belongs to the tile whose
-    half-open core [min, max) contains it — exactly once globally."""
-    b = tile_bbox(F.col("image_id"), F.lit(64), F.lit(64))
-    return trees.where(
-        (F.col("x") >= b["xmin"] + F.lit(buffer_m))
-        & (F.col("x") < b["xmax"] - F.lit(buffer_m))
-        & (F.col("y") >= b["ymin"] + F.lit(buffer_m))
-        & (F.col("y") < b["ymax"] - F.lit(buffer_m)))

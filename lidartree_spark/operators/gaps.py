@@ -22,57 +22,40 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lidartree_spark.operators.tiles import _map_tiles, check_params
+
 GAPS_SCHEMA = ("image_id string, gap_id long, n_pixels long, surface double, "
                "touches_border boolean")
 
 GAP_PARAMS = dict(
     res=0.5, ratio=2.0, gap_max_height=1.0, min_gap_surface=25.0,
     max_gap_surface=float("inf"), closing_height_bin=1.0,
-    nl_filter="Median", nl_size=3, gap_reconstruct=False,
+    nl_filter="Median", nl_size=3, gap_reconstruct=False, max_height=None,
 )
 
 
 def detect_gaps(tiles: DataFrame, params: dict | None = None) -> DataFrame:
-    p = {**GAP_PARAMS, **(params or {})}
-    padded = "pad" in tiles.columns
-    cols = ["image_id", "bytes", "w", "h", "fmt"] + (["pad"] if padded else [])
+    p = check_params(GAP_PARAMS, params)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def body(image_id: str, chm, pad: int) -> list[dict]:
         import numpy as np
-        from lidartree_spark.codecs import decode_tile
         from lidartree_spark.kernels.gaps import gap_detection
-        for pdf in batches:
-            out = []
-            for rec in pdf.itertuples(index=False):
-                chm = decode_tile(rec.bytes, rec.fmt, rec.w, rec.h)
-                g = gap_detection(
-                    chm, res=p["res"], ratio=p["ratio"],
-                    gap_max_height=p["gap_max_height"],
-                    min_gap_surface=p["min_gap_surface"],
-                    max_gap_surface=p["max_gap_surface"],
-                    closing_height_bin=p["closing_height_bin"],
-                    nl_filter=p["nl_filter"], nl_size=p["nl_size"],
-                    gap_reconstruct=p["gap_reconstruct"])
-                lab = g["gap_id"].astype(np.int64)
-                pad = int(getattr(rec, "pad", 0))
-                core = lab[pad:lab.shape[0] - pad or None,
-                           pad:lab.shape[1] - pad or None]
-                ids, counts = np.unique(core[core > 0], return_counts=True)
-                h_c, w_c = core.shape
-                for gid, n in zip(ids.tolist(), counts.tolist()):
-                    mask = core == gid
-                    border = bool(mask[0, :].any() or mask[-1, :].any()
-                                  or mask[:, 0].any() or mask[:, -1].any())
-                    out.append({
-                        "image_id": rec.image_id, "gap_id": int(gid),
+        lab = gap_detection(chm, **p)["gap_id"].astype(np.int64)
+        core = lab[pad:lab.shape[0] - pad or None,
+                   pad:lab.shape[1] - pad or None]
+        ids, counts = np.unique(core[core > 0], return_counts=True)
+        out = []
+        for gid, n in zip(ids.tolist(), counts.tolist()):
+            mask = core == gid
+            border = bool(mask[0, :].any() or mask[-1, :].any()
+                          or mask[:, 0].any() or mask[:, -1].any())
+            out.append({"image_id": image_id, "gap_id": int(gid),
                         "n_pixels": int(n),
                         "surface": n * p["res"] * p["res"],
-                        "touches_border": border,
-                    })
-            yield pd.DataFrame(out, columns=["image_id", "gap_id", "n_pixels",
-                                             "surface", "touches_border"])
+                        "touches_border": border})
+        return out
 
-    return tiles.select(*cols).mapInPandas(run, schema=GAPS_SCHEMA)
+    return _map_tiles(tiles, body, GAPS_SCHEMA)
 
 
 _LABELED_SCHEMA = ("image_id string, kind string, gap_id long, n_pixels long, "
@@ -283,50 +266,33 @@ def detect_gaps_global(tiles: DataFrame, params: dict | None = None,
     # the true canopy max close all-zero binaries — exact no-ops that the
     # kernel short-circuits (kernels/gaps.py) — whereas a lower pin (e.g.
     # 20 on a 35 m canopy) silently truncates the ladder
-    p = {**GAP_PARAMS, "max_height": 60.0, **(params or {})}
+    p = check_params({**GAP_PARAMS, "max_height": 60.0}, params)
     min_surf, max_surf = p["min_gap_surface"], p["max_gap_surface"]
     res = p["res"]
-    padded = with_halo(tiles, halo_px)
+    # keep every label: the surface filter must run on the GLOBAL surface
+    # after the merge, not per tile
+    kp = {**p, "min_gap_surface": 0.0, "max_gap_surface": float("inf")}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def body(image_id: str, chm, pad: int) -> list[dict]:
         import numpy as np
-        from lidartree_spark.codecs import decode_tile
         from lidartree_spark.kernels.gaps import gap_detection
-        for pdf in batches:
-            out = []
-            for rec in pdf.itertuples(index=False):
-                chm = decode_tile(rec.bytes, rec.fmt, rec.w, rec.h)
-                g = gap_detection(
-                    chm, res=res, ratio=p["ratio"],
-                    gap_max_height=p["gap_max_height"],
-                    # keep every label: the surface filter must run on the
-                    # GLOBAL surface after the merge, not per tile
-                    min_gap_surface=0.0, max_gap_surface=float("inf"),
-                    closing_height_bin=p["closing_height_bin"],
-                    nl_filter=p["nl_filter"], nl_size=p["nl_size"],
-                    gap_reconstruct=p["gap_reconstruct"],
-                    max_height=p["max_height"])
-                lab = g["gap_id"].astype(np.int64)
-                pad = int(getattr(rec, "pad", 0))
-                core = lab[pad:lab.shape[0] - pad or None,
-                           pad:lab.shape[1] - pad or None]
-                ids, counts = np.unique(core[core > 0], return_counts=True)
-                for gid, n in zip(ids.tolist(), counts.tolist()):
-                    out.append({"image_id": rec.image_id, "kind": "gap",
-                                "gap_id": int(gid), "n_pixels": int(n),
-                                "edge": None, "pos": None})
-                for edge, strip in (("n", core[0, :]), ("s", core[-1, :]),
-                                    ("w", core[:, 0]), ("e", core[:, -1])):
-                    for pos in np.nonzero(strip)[0]:
-                        out.append({"image_id": rec.image_id,
-                                    "kind": "border",
-                                    "gap_id": int(strip[pos]),
-                                    "edge": edge, "pos": int(pos),
-                                    "n_pixels": 0})
-            yield pd.DataFrame(out, columns=["image_id", "kind", "gap_id",
-                                             "n_pixels", "edge", "pos"])
+        lab = gap_detection(chm, **kp)["gap_id"].astype(np.int64)
+        core = lab[pad:lab.shape[0] - pad or None,
+                   pad:lab.shape[1] - pad or None]
+        ids, counts = np.unique(core[core > 0], return_counts=True)
+        out = [{"image_id": image_id, "kind": "gap", "gap_id": int(gid),
+                "n_pixels": int(n), "edge": None, "pos": None}
+               for gid, n in zip(ids.tolist(), counts.tolist())]
+        for edge, strip in (("n", core[0, :]), ("s", core[-1, :]),
+                            ("w", core[:, 0]), ("e", core[:, -1])):
+            for pos in np.nonzero(strip)[0]:
+                out.append({"image_id": image_id, "kind": "border",
+                            "gap_id": int(strip[pos]), "edge": edge,
+                            "pos": int(pos), "n_pixels": 0})
+        return out
 
-    labeled = padded.mapInPandas(run, schema=_LABELED_SCHEMA).persist()
+    labeled = _map_tiles(with_halo(tiles, halo_px), body,
+                         _LABELED_SCHEMA).persist()
     gaps = labeled.where("kind = 'gap'")
     # the shared regex+raise parse policy (operators/grid._tile_part):
     # a truncated fixed-position parse would build colliding boundary

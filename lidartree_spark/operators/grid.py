@@ -14,9 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# image_id convention from the generator: t{row:04d}_{col:04d}
-TILE_W = 64
-TILE_H = 64
 RES = 0.5
 
 

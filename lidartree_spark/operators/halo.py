@@ -37,16 +37,12 @@ def with_halo(tiles: DataFrame, halo_px: int = 16) -> DataFrame:
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
         from lidartree_spark.codecs import decode_tile, encode_tile
-        from lidartree_spark.generator import parse_tile_id
+        from lidartree_spark.generator import parse_tile_id, tile_id
         for pdf in batches:
             out = []
             for rec in pdf.itertuples(index=False):
                 arr = decode_tile(rec.bytes, rec.fmt, rec.w, rec.h)
                 r, c = parse_tile_id(rec.image_id)
-
-                def tid(rr, cc):
-                    return f"t{rr:04d}_{cc:04d}"
-
                 # self
                 out.append({"target": rec.image_id, "part": "self",
                             "bytes": rec.bytes if rec.fmt == "raw_f32"
@@ -73,7 +69,7 @@ def with_halo(tiles: DataFrame, halo_px: int = 16) -> DataFrame:
                     # corpus are dropped in assemble (no "self" part)
                     if rr < 0 or cc < 0:
                         continue
-                    out.append({"target": tid(rr, cc), "part": part,
+                    out.append({"target": tile_id(rr, cc), "part": part,
                                 "bytes": encode_tile(
                                     np.ascontiguousarray(sub), "raw_f32"),
                                 "w": sub.shape[1], "h": sub.shape[0]})

@@ -3,16 +3,11 @@ greedy assignment, plus confusion counts and height regression aggregates.
 
 Scale design (SURVEY.md §2.6): the greedy assignment is inherently sequential
 per group but groups are small (one tile/plot: ~10 trees), so the engine
-shuffles once on the group key and runs the exact reference loop in numpy.
-Two physical strategies, same semantics (parity-tested):
-- match_trees: one hash shuffle, rows sorted by (key, side) within
-  partitions, BATCHED grouped map (group boundaries found by slicing inside
-  each Arrow batch — per-group cost is a numpy slice, not an Arrow round
-  trip). The scale default; the group key is the skew unit and AQE covers
-  hot spots.
-- detect_and_match: broadcast the (small) inventory into the detection
-  stage — the whole pipeline fuses to one zero-shuffle map. Best when the
-  corpus >> inventory and per-core counts dominate (single-executor edge).
+shuffles once on the group key and runs the exact reference loop in numpy:
+rows sorted by (key, side) within partitions, then a BATCHED grouped map
+(group boundaries found by slicing inside each Arrow batch — per-group cost
+is a numpy slice, not an Arrow round trip). The group key is the skew unit
+and AQE covers hot spots.
 """
 
 from __future__ import annotations
@@ -103,82 +98,6 @@ def match_trees(ref: DataFrame, det: DataFrame,
                 yield res
 
     return u.mapInPandas(run, schema=MATCH_SCHEMA)
-
-
-def detect_and_match(tiles: DataFrame, ref: DataFrame,
-                     params: dict | None = None,
-                     delta_ground: float = 2.1, h_prec: float = 0.14,
-                     key: str = "image_id") -> DataFrame:
-    """Fused detect + match with a BROADCAST inventory: the whole flagship
-    pipeline collapses to one zero-shuffle mapInPandas stage.
-
-    This is the map-side broadcast-join strategy for the (common) case where
-    the reference inventory is a small dimension table (field plots: 10^3 -
-    10^6 rows) against a huge tile corpus — the same small-side tradeoff
-    Catalyst makes for broadcast hash joins. For inventories too big to
-    broadcast, `match_trees` is the shuffle path (grid-bucketed cogroup).
-    Semantics identical to detect_trees + match_trees (asserted in
-    tests/test_spark_pipeline.py)."""
-    from lidartree_spark.operators.detection import DEFAULT_PARAMS
-
-    p = {**DEFAULT_PARAMS, **(params or {})}
-    ref_pdf = (ref.select(key, "tree_id", "x", "y", "h")
-               .toPandas().sort_values([key, "tree_id"]))
-    ref_groups = {k: g[["x", "y", "h"]].to_numpy()
-                  for k, g in ref_pdf.groupby(key, sort=False)}
-    bc = tiles.sparkSession.sparkContext.broadcast(ref_groups)
-    padded = "pad" in tiles.columns
-    cols = ["image_id", "bytes", "w", "h", "fmt"] + (["pad"] if padded else [])
-
-    def run(batches):
-        import numpy as np
-        from lidartree_spark.codecs import decode_tile
-        from lidartree_spark.generator import parse_tile_id, tile_origin
-        from lidartree_spark.kernels.extraction import tree_extraction
-        from lidartree_spark.kernels.matching import tree_matching
-        from lidartree_spark.kernels.segmentation import tree_segmentation
-        groups = bc.value
-        res = p["res"]
-        for pdf in batches:
-            out = []
-            for rec in pdf.itertuples(index=False):
-                lr = groups.get(rec.image_id)
-                if lr is None or not len(lr):
-                    continue
-                chm = decode_tile(rec.bytes, rec.fmt, rec.w, rec.h)
-                seg = tree_segmentation(
-                    chm, res=res, nl_filter=p["nl_filter"],
-                    nl_size=p["nl_size"], sigma=p["sigma"],
-                    max_width=p["max_width"], hmin=p["hmin"], dmin=p["dmin"],
-                    dprop=p["dprop"], prop=p["prop"],
-                    min_value=p["min_value"])
-                row, col = parse_tile_id(rec.image_id)
-                pad = int(getattr(rec, "pad", 0))
-                w_core, h_core = rec.w - 2 * pad, rec.h - 2 * pad
-                x0, y1 = tile_origin(row, col, w_core, h_core, res)
-                rows = tree_extraction(
-                    seg["filled_dem"], seg["local_maxima"],
-                    seg["segments_id"], x0=x0 - pad * res,
-                    y1=y1 + pad * res, res=res)
-                if pad:
-                    x1 = x0 + w_core * res
-                    y0 = y1 - h_core * res
-                    rows = [r for r in rows
-                            if x0 <= r["x"] < x1 and y0 <= r["y"] < y1]
-                if not rows:
-                    continue
-                rows.sort(key=lambda r: r["id"])
-                ld = np.array([[r["x"], r["y"], r["h"]] for r in rows])
-                for m in tree_matching(lr, ld, delta_ground=delta_ground,
-                                       h_prec=h_prec):
-                    out.append({"image_id": rec.image_id,
-                                "r": int(m["r"]), "d": int(m["d"]),
-                                "h_diff": m["h_diff"],
-                                "plan_diff": m["plan_diff"]})
-            yield pd.DataFrame(out, columns=["image_id", "r", "d",
-                                             "h_diff", "plan_diff"])
-
-    return tiles.select(*cols).mapInPandas(run, schema=MATCH_SCHEMA)
 
 
 def detection_counts(ref: DataFrame, det: DataFrame, matched: DataFrame,

@@ -41,12 +41,13 @@ def points_to_tiles(points: DataFrame, res: float = 0.5, tile_px: int = 64,
     def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
         from lidartree_spark.codecs import encode_tile, phash64
+        from lidartree_spark.generator import tile_id
         row, col = int(key[0]), int(key[1])
         arr = np.full((tile_px, tile_px), np.nan, dtype=np.float32)
         # array row 0 = top (max y): py counts cells up from the tile's ymin
         arr[tile_px - 1 - pdf["py"].to_numpy(), pdf["px"].to_numpy()] = \
             pdf["z"].to_numpy()
-        image_id = f"t{row:04d}_{col:04d}"
+        image_id = tile_id(row, col)
         return pd.DataFrame([{
             "image_id": image_id,
             "bytes": encode_tile(arr, "raw_f32"),
@@ -103,6 +104,7 @@ def points_to_dtm_tiles(points: DataFrame, res: float = 0.5,
     def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
         from lidartree_spark.codecs import encode_tile, phash64
+        from lidartree_spark.generator import tile_id
         from lidartree_spark.kernels.tin import tin_interpolate
         row, col = int(key[0]), int(key[1])
         if not pdf["is_core"].any():
@@ -117,7 +119,7 @@ def points_to_dtm_tiles(points: DataFrame, res: float = 0.5,
             arr = np.full((tile_px, tile_px), np.nan, dtype=np.float64)
         else:
             arr = tin_interpolate(pts, pdf["z"].to_numpy(), gx, gy)
-        image_id = f"t{row:04d}_{col:04d}"
+        image_id = tile_id(row, col)
         a32 = arr.astype(np.float32)
         return pd.DataFrame([{
             "image_id": image_id,

@@ -18,6 +18,40 @@ TILES_SCHEMA = ("image_id string, bytes binary, w int, h int, fmt string, "
                 "caption string, phash long")
 
 
+def check_params(defaults: dict, params: dict | None) -> dict:
+    """`defaults` overridden by `params`. An unknown key raises here, on the
+    driver: merged silently it would run with the default (or, passed on to
+    a kernel, fail inside an executor)."""
+    unknown = sorted(set(params or {}) - set(defaults))
+    if unknown:
+        raise ValueError(f"unknown parameter(s) {unknown}; "
+                         f"allowed: {sorted(defaults)}")
+    return {**defaults, **(params or {})}
+
+
+def _map_tiles(tiles: DataFrame, body, schema: str) -> DataFrame:
+    """The per-tile kernel stage: zero-shuffle mapInPandas that reads only
+    (image_id, bytes, w, h, fmt) — plus `pad` on halo-padded tiles —
+    decodes every tile once and emits the rows of
+    `body(image_id, arr, pad) -> list[dict]` under `schema`."""
+    cols = ["image_id", "bytes", "w", "h", "fmt"]
+    if "pad" in tiles.columns:
+        cols.append("pad")
+    out_cols = [f.split()[0] for f in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from lidartree_spark.codecs import decode_tile
+        for pdf in batches:
+            out = []
+            for rec in pdf.itertuples(index=False):
+                arr = decode_tile(rec.bytes, rec.fmt, rec.w, rec.h)
+                out.extend(body(rec.image_id, arr,
+                                int(getattr(rec, "pad", 0))))
+            yield pd.DataFrame(out, columns=out_cols)
+
+    return tiles.select(*cols).mapInPandas(run, schema=schema)
+
+
 def synthetic_tiles(spark: SparkSession, n_rows: int, n_cols: int,
                     partitions: int | None = None) -> DataFrame:
     """Materialize an n_rows x n_cols tile grid as a DataFrame.

@@ -1334,6 +1334,7 @@ def _spike_tiles(spark: SparkSession) -> DataFrame:
     def gen(batches):
         import numpy as np
         from lidartree_spark.codecs import encode_tile
+        from lidartree_spark.generator import tile_id
         for pdf in batches:
             out = []
             for t in pdf["id"]:
@@ -1345,7 +1346,7 @@ def _spike_tiles(spark: SparkSession) -> DataFrame:
                         rr, cc = row * 2 + bi, col * 2 + bj
                         z[8 + 32 * bi, 8 + 32 * bj] = \
                             10 + (rr * 7 + cc * 11) % 16
-                tid = f"t{row:04d}_{col:04d}"
+                tid = tile_id(row, col)
                 out.append({"image_id": tid,
                             "bytes": encode_tile(z, "raw_f32"),
                             "w": 64, "h": 64, "fmt": "raw_f32",
@@ -2249,6 +2250,7 @@ def _halo_dominance_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     def gen(batches):
         import numpy as np
         from lidartree_spark.codecs import encode_tile
+        from lidartree_spark.generator import tile_id
         for pdf in batches:
             out = []
             for t in pdf["id"]:
@@ -2257,7 +2259,7 @@ def _halo_dominance_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for cx, cy, h in _HALO_SPIKES:
                     if cx // 64 == c and cy // 64 == r:
                         z[63 - (cy % 64), cx % 64] = h
-                tid = f"t{r:04d}_{c:04d}"
+                tid = tile_id(r, c)
                 out.append({"image_id": tid,
                             "bytes": encode_tile(z, "raw_f32"),
                             "w": 64, "h": 64, "fmt": "raw_f32"})
@@ -5911,6 +5913,7 @@ def _overview_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pandas as pd
 
         from lidartree_spark.codecs import encode_tile
+        from lidartree_spark.generator import tile_id
         for pdf in batches:
             rows = []
             for t in pdf["id"]:
@@ -5918,7 +5921,7 @@ def _overview_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 i = np.arange(8, dtype=np.float64)[:, None]
                 j = np.arange(8, dtype=np.float64)[None, :]
                 chm = t + (i + j) * 0.25
-                rows.append({"image_id": f"t{t // 4:04d}_{t % 4:04d}",
+                rows.append({"image_id": tile_id(t // 4, t % 4),
                              "bytes": encode_tile(chm.astype(np.float32),
                                                   "png16"),
                              "w": 8, "h": 8, "fmt": "png16"})

@@ -46,12 +46,14 @@ _NAMES = {0: "Null", 1: "Point", 3: "PolyLine", 5: "Polygon",
 def _ring_to_wkt(points: np.ndarray, parts: list[int]) -> str:
     # repr = shortest round-trip decimal: %g's 6 significant digits
     # collapse UTM northings (4500000.75 -> 4.5e+06), degenerating every
-    # real-world plot boundary
+    # real-world plot boundary. repr of a builtin float: NumPy >= 2 reprs
+    # np.float64 as 'np.float64(...)'
     rings = []
     bounds = parts + [len(points)]
     for a, b in zip(bounds[:-1], bounds[1:]):
         ring = points[a:b]
-        rings.append("(" + ", ".join(f"{x!r} {y!r}" for x, y in ring)
+        rings.append("(" + ", ".join(f"{float(x)!r} {float(y)!r}"
+                                     for x, y in ring)
                      + ")")
     return "POLYGON (" + ", ".join(rings) + ")"
 
@@ -236,7 +238,11 @@ def _dbf_bytes(attrs: pd.DataFrame) -> bytes:
                     txt = str(int(v))
                 else:
                     txt = f"{float(v):.{fdec}f}"
-                out += txt.rjust(flen)[:flen].encode("ascii")
+                if len(txt) > flen:
+                    raise ValueError(
+                        f"dbf field {orig!r}: {txt} is wider than its "
+                        f"{flen}-character numeric field")
+                out += txt.rjust(flen).encode("ascii")
             elif ftype == "L":
                 out += (b"T" if v else b"F")
             else:
@@ -277,6 +283,13 @@ def write_shapefile(df: pd.DataFrame, path: str):
         has_z = "z" in df.columns and df["z"].notna().any()
         stype = _SHAPE_POINTZ if has_z else _SHAPE_POINT
         attr_cols = [c for c in df.columns if c not in ("x", "y", "z")]
+        bad = ~(np.isfinite(df["x"].to_numpy(float))
+                & np.isfinite(df["y"].to_numpy(float)))
+        if bad.any():
+            raise ValueError(
+                "write_shapefile: non-finite x/y in rows "
+                f"{df.index[bad].tolist()[:10]} (a point record and the "
+                "header bbox need finite coordinates; drop or fix them)")
         for _, row in df.iterrows():
             content = struct.pack("<i3d" if has_z else "<i2d", stype,
                                   *( (row["x"], row["y"],

@@ -243,14 +243,13 @@ def write_geotiff_tiles(tiles, directory: str, res: float = 0.5):
 
     def emit(batches):
         from lidartree_spark.codecs import decode_tile
-        from lidartree_spark.generator import parse_tile_id
+        from lidartree_spark.generator import parse_tile_id, tile_origin
         for pdf in batches:
             out = []
             for rec in pdf.itertuples(index=False):
                 arr = decode_tile(rec.bytes, rec.fmt, rec.w, rec.h)
-                r, c = parse_tile_id(rec.image_id)
-                x0 = c * rec.w * res
-                y1 = (r + 1) * rec.h * res
+                x0, y1 = tile_origin(*parse_tile_id(rec.image_id), rec.w,
+                                     rec.h, res)
                 buf = encode_geotiff(arr.astype(np.float32), x0, y1, res,
                                      caption=rec.caption)
                 path = _os.path.join(directory, f"{rec.image_id}.tif")
@@ -302,6 +301,7 @@ def read_geotiff_tiles(spark, paths, res: float = 0.5):
 
     def emit(batches):
         from lidartree_spark.codecs import encode_tile
+        from lidartree_spark.generator import tile_id
         for pdf in batches:
             out = []
             for p in pdf["path"]:
@@ -330,7 +330,7 @@ def read_geotiff_tiles(spark, paths, res: float = 0.5):
                     raise ValueError(
                         f"{p}: raster at ({geo['x0']}, {geo['y1']}) is "
                         f"not aligned to the {tw}x{th} tile grid")
-                tid = f"t{round(row):04d}_{round(col):04d}"
+                tid = tile_id(round(row), round(col))
                 out.append({
                     "image_id": tid,
                     "bytes": encode_tile(arr.astype(np.float32),

@@ -77,6 +77,42 @@ def test_utm_polygon_precision_survives(tmp_path):
                           np.array(ring, dtype=np.float64))
 
 
+def test_wkt_coordinates_print_as_plain_decimals():
+    """Ring coordinates go through float(): a scalar type whose repr is
+    not its decimal (NumPy >= 2 reprs np.float64 as 'np.float64(...)')
+    must not leak into the WKT."""
+    from lidartree_spark.shp import _ring_to_wkt
+
+    class Scalar(float):
+        def __repr__(self):
+            return f"Scalar({float(self)!r})"
+
+    ring = np.array([[Scalar(v) for v in xy] for xy in
+                     [(0.5, 4500000.75), (32.25, 4500000.75),
+                      (32.25, 4500032.75), (0.5, 4500000.75)]],
+                    dtype=object)
+    assert _ring_to_wkt(ring, [0]) == (
+        "POLYGON ((0.5 4500000.75, 32.25 4500000.75, "
+        "32.25 4500032.75, 0.5 4500000.75))")
+    assert "np." not in _ring_to_wkt(np.array(ring, dtype=np.float64), [0])
+
+
+def test_dbf_numeric_overflow_raises(tmp_path):
+    """A number wider than its 19-character dbf field raises instead of
+    being cut to its first 19 characters."""
+    df = pd.DataFrame({"x": [1.0], "y": [2.0], "area": [1.5e13]})
+    with pytest.raises(ValueError, match="'area'.*19-character"):
+        write_shapefile(df, str(tmp_path / "wide.shp"))
+
+
+def test_nan_point_coordinates_raise(tmp_path):
+    """NaN x/y would be written into the point records and the header
+    bbox; the writer names the rows instead."""
+    df = pd.DataFrame({"x": [1.0, np.nan, 3.0], "y": [2.0, 2.5, np.nan]})
+    with pytest.raises(ValueError, match=r"rows \[1, 2\]"):
+        write_shapefile(df, str(tmp_path / "nan.shp"))
+
+
 def test_int_attrs_roundtrip_as_int_and_names_deduplicate(tmp_path):
     df = pd.DataFrame({
         "x": [1.0], "y": [2.0],

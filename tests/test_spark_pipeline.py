@@ -11,7 +11,6 @@ from lidartree_spark.kernels.matching import tree_matching
 from lidartree_spark.kernels.segmentation import tree_segmentation
 from lidartree_spark.operators.detection import (
     DEFAULT_PARAMS,
-    crop_to_core,
     detect_trees,
     prune_tiles_to_roi,
     segment_layers,
@@ -142,29 +141,34 @@ def test_prune_and_core_crop(spark):
     pruned = prune_tiles_to_roi(tiles, (1.0, 1.0, 20.0, 20.0))
     ids = [r.image_id for r in pruned.select("image_id").collect()]
     assert ids == ["t0000_0000"]
-    det = detect_trees(pruned)
-    core = crop_to_core(det, buffer_m=8.0)
-    for r in core.collect():
-        assert 8.0 <= r.x < 24.0 and 8.0 <= r.y < 24.0
-    assert core.count() <= det.count()
 
 
-def test_detect_and_match_equals_shuffle_path(spark):
-    """Fused broadcast-join pipeline == detect_trees + match_trees."""
-    from lidartree_spark.operators.detection import detect_trees
-    from lidartree_spark.operators.matching import detect_and_match, match_trees
-    from lidartree_spark.operators.tiles import synthetic_ref_trees, synthetic_tiles
+def test_unknown_detection_params_raise_on_driver(spark):
+    """A misspelt DEFAULT_PARAMS key names itself and the allowed set on
+    the driver instead of running silently with the default hmin."""
+    tiles = synthetic_tiles(spark, 1, 1)
+    for op in (detect_trees, segment_layers):
+        with pytest.raises(ValueError, match=r"'hmn'.*'hmin'"):
+            op(tiles, {"hmn": 3.0})
+    detect_trees(tiles, dict(DEFAULT_PARAMS))  # every own key is legal
 
-    tiles = synthetic_tiles(spark, 3, 3)
-    ref = synthetic_ref_trees(spark, 3, 3)
-    shuffled = {(r.image_id, r.r, r.d): (r.h_diff, r.plan_diff)
-                for r in match_trees(ref, detect_trees(tiles)).collect()}
-    fused = {(r.image_id, r.r, r.d): (r.h_diff, r.plan_diff)
-             for r in detect_and_match(tiles, ref).collect()}
-    assert fused.keys() == shuffled.keys()
-    for k in fused:
-        assert fused[k][0] == pytest.approx(shuffled[k][0])
-        assert fused[k][1] == pytest.approx(shuffled[k][1])
+
+def test_unknown_gap_params_raise_on_driver(spark):
+    """Same for GAP_PARAMS, which now lists max_height (None = the
+    kernel's own ladder bound) so the pinned 60.0 stays legal."""
+    from lidartree_spark.operators.gaps import (
+        GAP_PARAMS,
+        detect_gaps,
+        detect_gaps_global,
+    )
+
+    tiles = synthetic_tiles(spark, 1, 1)
+    for op in (detect_gaps, detect_gaps_global):
+        with pytest.raises(ValueError,
+                           match=r"'gap_max_heigth'.*'max_height'"):
+            op(tiles, {"gap_max_heigth": 2.0})
+    assert GAP_PARAMS["max_height"] is None
+    detect_gaps(tiles, {"max_height": 20.0})
 
 
 def test_geojson_roi_equals_wkt_roi():
